@@ -200,6 +200,12 @@ def generate_days(seed: int, n_symbols: int, n_days: int, violations: bool = Tru
     return [gen.next_day(d) for d in trading_days(n_days)]
 
 
+def last_ts(table: pa.Table) -> dict[str, int]:
+    """Symbol -> its latest ``ts_ns`` in ``table``."""
+    t = table.group_by("symbol").aggregate([("ts_ns", "max")])
+    return dict(zip(t["symbol"].to_pylist(), t["ts_ns_max"].to_pylist()))
+
+
 def write_parquet(table: pa.Table, path: str) -> int:
     """Stage a table as one Parquet file; returns its size in bytes."""
     pq.write_table(table, path)

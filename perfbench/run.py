@@ -4,25 +4,27 @@ Usage, from the root of a checkout:
 
     python3 perfbench/run.py --workload ingest_daily --seed 1 --seconds 12 --trace 0
 
-Workloads (see workloads.py): ``ingest_daily``, ``query_mix``,
-``rebuild_frames``. BENCHMARK.json lists the first two; ``rebuild_frames``
-runs the same way when asked for. The run starts one local Spark session with
-``local[<cpus>]``, builds its inputs from ``--seed``, sets up, measures for
-``--seconds`` seconds, checks every output, and prints two JSON lines: a
-detail line with the workload's own metrics (named after the operation, e.g.
-``increment_s_p50``, ``query_s_p90``, ``rebuild_s``), sizes and environment,
-then the result line with ``correct``, ``attempted``, ``failed`` and
-``metrics``.
+Workloads (see workloads.py): ``ingest_daily`` and ``query_mix``. The run
+starts one local Spark session with ``local[<cpus>]``, builds its inputs from
+``--seed``, sets up, measures, checks every output, and prints two JSON
+lines: a detail line with the workload's own metrics (named after the
+operation, e.g. ``increment_s_p50``, ``query_s_p90``), each with its sample
+count, plus sizes and environment; then the result line with ``correct``,
+``attempted``, ``failed`` and ``metrics``.
+
+``ingest_daily`` times exactly one increment per run. ``query_mix`` times
+whole rounds of its four query kinds, as many as ``--seconds`` divided by
+the nominal length of a round; the count never depends on how fast the
+machine is, so every run of a seed times the same work.
 
 The result line carries metrics every workload has, so each can be compared
 on each workload:
 
 - ``setup_s``: median of three set-ups into fresh directories.
-- ``op_s_p50``: median latency of the workload's operation (one increment,
-  one query, one full rebuild).
-- ``bars_per_s``: bars landed, returned (or aggregated over) or rebuilt per
-  second of operation time; the median over rounds of the workload's mix
-  (one query of each kind on ``query_mix``, one operation elsewhere).
+- ``op_s_p50``: median over rounds of the workload's mix of the mean latency
+  of one operation (one increment; one query of each kind).
+- ``bars_per_s``: bars landed, or returned (or aggregated over), per second
+  of operation time; the median over the same rounds.
 - ``lake_bytes_per_input_byte``: bytes of the lake the workload wrote per
   byte of staged input Parquet.
 
@@ -159,10 +161,9 @@ def environment(spark, args, startup_s: float) -> dict:
 
 
 def end_to_end_metrics(run) -> dict:
-    secs = [o.seconds for o in run.ops]
     return {
         "setup_s": (statistics.median(run.setup_s), "s"),
-        "op_s_p50": (statistics.median(secs), "s"),
+        "op_s_p50": (run.op_s_p50(), "s"),
         "bars_per_s": (run.bars_per_s(), "1/s"),
         "lake_bytes_per_input_byte": (run.lake_bytes_per_input_byte, "ratio"),
     }
@@ -173,6 +174,9 @@ def end_to_end_metrics(run) -> dict:
 #: operation. ``self`` (self time) and ``dur`` (inclusive time) are a share of
 #: the operations' wall time: a layer idle on a workload then reads 0 as a
 #: share, and the seconds per layer and operation are in the detail line.
+#: ``lake.write_bars`` and ``manifest.build_manifest`` run only in set-up on
+#: both workloads, so their per-op shares read 0; their ``*.setup_share``
+#: below carries them.
 PER_OP = {
     "lake.upsert_bars.calls": ("lake.upsert_bars", "calls"),
     "lake.upsert_bars.self_share": ("lake.upsert_bars", "self"),
@@ -261,7 +265,7 @@ def per_layer_metrics(run, span_cost_s: float) -> dict:
     out["manifest.read_pruned.files_kept_ratio"] = (kept, "ratio")
     out["manifest.read_pruned.files_total"] = (float(base), "count")
 
-    out["trace.op_s_p50"] = (statistics.median(o.seconds for o in run.ops), "s")
+    out["trace.op_s_p50"] = (run.op_s_p50(), "s")
     out["trace.overhead_s"] = (len(real) / n * span_cost_s, "s")
     out["trace.extra_exec_share"] = (sum(s.dur for s in op_spans if s.extra) / op_wall, "ratio")
     attributed = sum(selfs[s.sid] for s in real)

@@ -14,9 +14,9 @@ caller reads them at the end. A layer's self time is its duration minus the
 time its child spans cover.
 
 Lazy layers return a DataFrame whose work happens later. For those, the
-wrapper can also run the returned plan once to the ``noop`` sink; that run
-is recorded as a child span named ``<layer>.exec`` and flagged as extra work,
-so it is excluded from every parent's self time and from the op's wall time.
+wrapper also runs the returned plan once to the ``noop`` sink; that run is
+recorded as a span named ``<layer>.exec`` and flagged as extra work, so it
+is excluded from every parent's self time and from the op's wall time.
 """
 
 from __future__ import annotations
@@ -69,9 +69,11 @@ TARGETS = [
     ("marketpipe_spark.session", "tune"),
 ]
 
-#: Layers whose return value is a lazy plan; with ``exec_lazy`` the traced
-#: run executes it once more to the noop sink and records ``<name>.exec``.
-LAZY = {"operators.validation.split_valid", "operators.resample.resample"}
+#: Layers whose return value is a lazy plan; the traced run executes it once
+#: more to the noop sink and records ``<name>.exec``. ``split_valid`` calls
+#: ``validate_bars`` through the module attribute, so the validation rules
+#: run there as ``operators.validation.validate_bars.exec``.
+LAZY = {"operators.validation.validate_bars", "operators.resample.resample"}
 
 
 def layer_name(module: str, attr: str) -> str:
@@ -92,9 +94,8 @@ def self_times(spans: list[Span]) -> dict[int, float]:
 
 
 class Tracer:
-    def __init__(self, spark, exec_lazy: bool = True):
+    def __init__(self, spark):
         self.spark = spark
-        self.exec_lazy = exec_lazy
         self.spans: list[Span] = []
         self.enabled = False
         self.op = -1
@@ -161,18 +162,16 @@ class Tracer:
                 return fn(*args, **kwargs)
             with tracer.span(name):
                 out = fn(*args, **kwargs)
-            if tracer.exec_lazy and name in LAZY:
+            if name in LAZY:
                 tracer.exec_noop(name, out)
             return out
 
         return wrapper
 
-    def exec_noop(self, name: str, out) -> None:
-        """Extra work: run each DataFrame in ``out`` once to the noop sink."""
-        frames = out if isinstance(out, tuple) else (out,)
+    def exec_noop(self, name: str, df) -> None:
+        """Extra work: run the DataFrame ``df`` once to the noop sink."""
         with self.span(f"{name}.exec", extra=True):
-            for df in frames:
-                df.write.format("noop").mode("overwrite").save()
+            df.write.format("noop").mode("overwrite").save()
 
     def span_cost(self, n: int = 200) -> float:
         """Seconds one empty span adds to the traced program (timestamps and

@@ -58,13 +58,31 @@ def test_clean_days_have_no_violations():
 def test_check_increment_catches_corruption():
     day = gen.generate_days(11, 2, 1)[0]
     rows = [(sym, ts, *vals) for (sym, ts), vals in day.daily.items()]
-    assert verify.check_increment(day, day.n_valid, day.n_errors, rows, day.daily) == []
-    assert verify.check_increment(day, day.n_valid - 1, day.n_errors, rows, day.daily)
-    assert verify.check_increment(day, day.n_valid, day.n_errors + 1, rows, day.daily)
+    units = {(s, day.date) for s in gen.symbol_names(2)}
+
+    def check(n_landed=day.n_valid, n_errors=day.n_errors, expected=day.daily, job_units=units):
+        return verify.check_increment(day, n_landed, n_errors, rows, expected, job_units, units)
+
+    assert check() == []
+    assert check(n_landed=day.n_valid - 1)
+    assert check(n_errors=day.n_errors + 1)
     bad = dict(day.daily)
     key = next(iter(bad))
     bad[key] = (*bad[key][:4], bad[key][4] + 1)
-    assert verify.check_increment(day, day.n_valid, day.n_errors, rows, bad)
+    assert check(expected=bad)
+    # a unit of the day before: the checkpoint let the re-sent slice through
+    earlier = day.date.replace(day=day.date.day - 1)
+    assert check(job_units=units | {("S000", earlier)})
+
+
+def test_last_ts_is_the_checkpoint_the_resent_slice_falls_under():
+    history, today = gen.generate_days(9, 3, 2)
+    last = gen.last_ts(history.clean)
+    assert sorted(last) == gen.symbol_names(3)
+    t = today.bars.to_pydict()
+    resent = [(s, ts) for s, ts in zip(t["symbol"], t["ts_ns"]) if ts < gen.day_start_ns(today.date)]
+    assert len(resent) == gen.RESEND_MINUTES * 3
+    assert all(ts <= last[s] for s, ts in resent)
 
 
 @pytest.fixture()
@@ -100,27 +118,15 @@ def test_oracle_digest_catches_corrupted_result(tiny_lake):
         oracle.close()
 
 
-def test_frame_checksum_catches_corrupted_frame(tiny_lake, tmp_path):
-    root, day = tiny_lake
-    oracle = verify.Oracle()
-    try:
-        expected = oracle.expected_frame(root, "1d")
-        assert expected[0] == 2
-        agg = str(tmp_path / "agg")
-        for corrupt in (False, True):
-            for (sym, label), (o, h, low, c, v) in day.daily.items():
-                d = f"{agg}-{corrupt}/frame=1d/symbol={sym}/date={day.date}"
-                os.makedirs(d)
-                v = v + 1 if corrupt and sym == "S000" else v
-                pq.write_table(
-                    pa.table({"ts_ns": [label], "open": [o], "high": [h], "low": [low],
-                              "close": [c], "volume": [v]}),
-                    f"{d}/part-0.parquet",
-                )
-        assert oracle.actual_frame(f"{agg}-False", "1d") == expected
-        assert oracle.actual_frame(f"{agg}-True", "1d") != expected
-    finally:
-        oracle.close()
+def test_round_medians():
+    import workloads
+
+    run = workloads.Run(None, None, "", 0, 0.0, round_size=2)
+    run.ops = [workloads.Op("a", s, b) for s, b in [(1.0, 10), (3.0, 30), (2.0, 10), (2.0, 10),
+                                                        (9.0, 90), (1.0, 10), (5.0, 0)]]
+    # rounds: (1, 3), (2, 2), (9, 1); the odd last op is not a whole round
+    assert run.op_s_p50() == 2.0
+    assert run.bars_per_s() == 10.0
 
 
 def test_self_time_arithmetic():

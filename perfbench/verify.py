@@ -11,10 +11,7 @@ import hashlib
 
 import duckdb
 
-from gen import NS_PER_DAY, OPEN_OFFSET_NS
-
 BAR_COLS = "symbol, ts_ns, open, high, low, close, volume"
-FRAME_SECONDS = {"5m": 300, "15m": 900, "1h": 3600, "4h": 14400, "1d": 86400}
 
 
 def digest(rows) -> str:
@@ -62,33 +59,16 @@ class Oracle:
             "GROUP BY symbol ORDER BY symbol"
         )
 
-    # -- rebuild_frames ------------------------------------------------------
-    def expected_frame(self, raw_root: str, frame: str) -> tuple[int, int]:
-        """(rows, checksum) of the resample of the raw 1m lake to ``frame``."""
-        w = FRAME_SECONDS[frame] * 1_000_000_000
-        if frame == "1d":
-            label = f"ts_ns - ts_ns % {NS_PER_DAY} + {OPEN_OFFSET_NS}"
-        else:
-            label = f"ts_ns - ts_ns % {w}"
-        return self._checksum(
-            f"SELECT symbol, {label} AS ts_ns, arg_min(open, ts_ns) AS open, max(high) AS high, "
-            f"min(low) AS low, arg_max(close, ts_ns) AS close, sum(volume)::BIGINT AS volume "
-            f"FROM {_scan(frame_glob(raw_root, '1m'))} GROUP BY ALL"
-        )
-
-    def actual_frame(self, root: str, frame: str) -> tuple[int, int]:
-        return self._checksum(f"SELECT {BAR_COLS} FROM {_scan(frame_glob(root, frame))}")
-
-    def _checksum(self, sql: str) -> tuple[int, int]:
-        n, h = self.rows(
-            f"SELECT count(*), coalesce(sum(hash({BAR_COLS})), 0) FROM ({sql})"
-        )[0]
-        return int(n), int(h)
-
-
-def check_increment(day, n_landed: int, n_errors: int, daily_rows, expected_daily: dict) -> list[str]:
-    """One ingest increment: rows of the day, error rows and the 1d bars."""
+def check_increment(day, n_landed: int, n_errors: int, daily_rows, expected_daily: dict,
+                    job_units, expected_units: set) -> list[str]:
+    """One ingest increment: rows of the day, error rows, the 1d bars, and
+    the job's (symbol, day) work units. A unit of an earlier day means the
+    checkpoint did not drop the re-sent slice."""
     problems = []
+    units = {(r[0], r[1]) for r in job_units}
+    if units != expected_units:
+        problems.append(f"{day.date}: job units {sorted(units - expected_units)} unexpected, "
+                        f"{sorted(expected_units - units)} missing")
     if n_landed != day.n_valid:
         problems.append(f"{day.date}: {n_landed} 1m rows landed, expected {day.n_valid}")
     if n_errors != day.n_errors:

@@ -1,17 +1,15 @@
-"""The benchmark's three workloads, each a closed loop with one client.
+"""The benchmark's workloads, each a closed loop with one client.
 
-- ``ingest_daily``: daily 1m increments through
+- ``ingest_daily``: a daily 1m increment through
   ``streaming.incremental.incremental_job`` with checkpoint, jobs and metrics
   stores on. The write path: validation, keep-last upsert, resampling of the
   touched slice and control-plane writes.
 - ``query_mix``: point loads, range loads, SQL over the ``bars_*`` views and
   manifest-pruned scans over a lake written during set-up. The read path.
-- ``rebuild_frames``: a full recompute of every aggregate frame from the 1m
-  lake. Bulk scan, shuffle and write.
 
 Each workload function takes a :class:`Run`, sets up ``SETUP_REPS`` times
-into fresh directories (keeping the last), runs its operations for
-``run.seconds`` and checks every operation's output outside the timed region.
+into fresh directories (keeping the last), runs a fixed number of timed
+operations and checks every operation's output outside the timed region.
 """
 
 from __future__ import annotations
@@ -25,7 +23,6 @@ import statistics
 import time
 
 import pyarrow as pa
-import pyarrow.parquet as pq
 
 import gen
 import verify
@@ -33,22 +30,19 @@ import verify
 SETUP_REPS = 3
 
 INGEST_SYMBOLS = 6
-INGEST_MAX_INCREMENTS = 7
+INGEST_JOB = "ingest-stream"  # the increment resumes from this job's checkpoint
 INGEST_FRAMES = ("5m", "1h", "1d")
 
-QUERY_SYMBOLS = 4
-QUERY_DAYS = 6
+QUERY_SYMBOLS = 3
+QUERY_DAYS = 12
 QUERY_FRAMES = ("5m", "1h", "1d")
 QUERY_KINDS = ("point_load", "range_load", "sql_view", "pruned_scan")
-QUERY_WARMUP_S = 8
-RANGE_SYMBOLS = 3
-RANGE_DAYS = 4
-PRUNED_DAYS = 3
-VIEW_DAYS = {"1h": 3, "1d": 6}
-
-REBUILD_SYMBOLS = 4
-REBUILD_DAYS = 4
-REBUILD_FRAMES = ("5m", "15m", "1h", "4h", "1d")
+QUERY_WARMUP_ROUNDS = 10
+QUERY_ROUND_S = 1.2  # nominal seconds of one round on 4 cores: --seconds / this = rounds timed
+RANGE_SYMBOLS = 2
+RANGE_DAYS = 10  # two weeks of trading days
+PRUNED_DAYS = 4
+VIEW_DAYS = {"1h": 4, "1d": 12}
 
 COLS = gen.COLUMNS
 
@@ -80,12 +74,20 @@ class Run:
     lake_bytes_per_input_byte: float = 0.0
     round_size: int = 1  # operations per round of the workload's mix
 
+    def rounds(self) -> list[list[Op]]:
+        k = self.round_size
+        return [self.ops[i:i + k] for i in range(0, len(self.ops) - k + 1, k)]
+
+    def op_s_p50(self) -> float:
+        """Median over whole rounds of the mean seconds per operation. A plain
+        median over a mix of kinds would fall between two kinds' latencies
+        and jump from one to the other as their counts shift."""
+        return statistics.median(statistics.fmean(o.seconds for o in r) for r in self.rounds())
+
     def bars_per_s(self) -> float:
         """Median over whole rounds of bars moved per second of op time."""
-        k = self.round_size
-        rounds = [self.ops[i:i + k] for i in range(0, len(self.ops) - k + 1, k)]
         return statistics.median(
-            sum(o.bars for o in r) / sum(o.seconds for o in r) for r in rounds)
+            sum(o.bars for o in r) / sum(o.seconds for o in r) for r in self.rounds())
 
     def span(self, name: str):
         return self.tracer.span(name) if self.tracer else contextlib.nullcontext()
@@ -103,22 +105,19 @@ class Run:
         return _tracing(self.tracer, -1)
 
     def timed_ops(self, next_op, check, watch_roots=(), control_root=None, round_size=1):
-        """Run operations until ``seconds`` have passed or inputs run out;
-        the deadline is only looked at every ``round_size`` operations.
+        """Run operations until ``next_op`` returns ``None``.
 
         ``next_op(i)`` returns ``(kind, fn)`` or ``None``; ``fn()`` returns
         ``(bars, output)``. ``check(i, output)`` returns a list of problems
         and runs untimed after each operation. In a traced run, file
-        counters are taken between operations.
+        counters are taken between operations. The number of operations is
+        the workload's to fix, never a deadline's, so a faster or slower
+        machine times the same work.
         """
         self.round_size = round_size
         listing = self._listing(watch_roots) if self.tracer else None
-        deadline = time.perf_counter() + self.seconds
         i = 0
-        while i % round_size or time.perf_counter() < deadline:
-            spec = next_op(i)
-            if spec is None:
-                break
+        while (spec := next_op(i)) is not None:
             kind, fn = spec
             traced = self.tracer is not None
             with _tracing(self.tracer, i) if traced else contextlib.nullcontext():
@@ -183,70 +182,70 @@ def _lake_bytes(run: Run, *roots: str) -> int:
 
 
 def ingest_daily(run: Run) -> None:
-    """Set-up stages the daily inputs and lands day 0 as history with
-    ``write_bars`` (raw 1m and the aggregate frames), as an earlier day's
-    ingest would have left it. The timed increments start at day 1, whose
-    input re-sends the tail of day 0, so the first one is what a daily
-    ingest process pays against an existing lake."""
+    """Set-up stages two days of input and lands day 0 as history with
+    ``write_bars`` (raw 1m and the aggregate frames), then saves the stream
+    job's checkpoint at day 0's last bar, as day 0's ingest under the same
+    job id would have left it. The increment is day 1, whose input re-sends
+    the tail of day 0: the checkpoint drops that slice.
+
+    A run times exactly this one increment, the first of its process, as a
+    daily ingest process would run it, whatever ``seconds`` is: every run
+    measures the same work from the same point in the process's life."""
     mp, spark = run.mp, run.spark
-    n_days = 1 + INGEST_MAX_INCREMENTS
+    inc = mp.incremental
+    symbols = gen.symbol_names(INGEST_SYMBOLS)
     for rep in range(SETUP_REPS):
         d = run.fresh(f"ingest-{rep}")
         raw, agg, ctl = f"{d}/raw", f"{d}/agg", f"{d}/raw_ctl"
         os.makedirs(f"{d}/inputs")
         with run.traced_setup():
             t0 = time.perf_counter()
-            days = gen.generate_days(run.seed, INGEST_SYMBOLS, n_days)
-            in_bytes, inputs = [], []
-            for k, day in enumerate(days):
-                path = f"{d}/inputs/day-{k:02d}.parquet"
-                in_bytes.append(gen.write_parquet(day.clean if k == 0 else day.bars, path))
-                inputs.append(spark.read.parquet(path))
-            mp.lake.write_bars(inputs[0], raw, "1m", ingest_id="history")
-            history = mp.lake.read_bars(spark, raw, frame="1m").select(*COLS)
+            history, today = gen.generate_days(run.seed, INGEST_SYMBOLS, 2)
+            in_bytes = gen.write_parquet(history.clean, f"{d}/inputs/day-00.parquet")
+            in_bytes += gen.write_parquet(today.bars, f"{d}/inputs/day-01.parquet")
+            increment = spark.read.parquet(f"{d}/inputs/day-01.parquet")
+            mp.lake.write_bars(spark.read.parquet(f"{d}/inputs/day-00.parquet"), raw, "1m",
+                               ingest_id="history")
+            src = mp.lake.read_bars(spark, raw, frame="1m").select(*COLS)
             for frame in INGEST_FRAMES:
-                mp.lake.write_bars(mp.resample.resample(history, frame), agg, frame,
+                mp.lake.write_bars(mp.resample.resample(src, frame), agg, frame,
                                    ingest_id="history")
+            checkpoints = inc.CheckpointStore(spark, f"{ctl}/checkpoints")
+            checkpoints.save(INGEST_JOB, gen.last_ts(history.clean))
             run.setup_s.append(time.perf_counter() - t0)
     run.sizes = {"symbols": INGEST_SYMBOLS, "bars_per_increment": gen.BARS_PER_DAY * INGEST_SYMBOLS,
+                 "resent_bars": gen.RESEND_MINUTES * INGEST_SYMBOLS,
                  "frames": ["1m", *INGEST_FRAMES], "history_days": 1}
-    inc = mp.incremental
-    checkpoints = inc.CheckpointStore(spark, f"{ctl}/checkpoints")
     jobs = mp.control.JobsStore(spark, f"{ctl}/jobs")
     metrics = mp.control.MetricsStore(spark, f"{ctl}/metrics")
-    symbols = gen.symbol_names(INGEST_SYMBOLS)
 
-    def increment(k: int):
-        day = days[k]
+    def run_increment():
         out = inc.incremental_job(
-            spark, f"ingest-{day.date}", inputs[k], raw, agg, checkpoints,
+            spark, INGEST_JOB, increment, raw, agg, checkpoints,
             frames=list(INGEST_FRAMES), market_hours=False, jobs=jobs, metrics=metrics,
             provider="perfbench", feed="perfbench",
         )
-        return day.n_valid, out
+        return today.n_valid, out
 
-    def check(k: int, out) -> list[str]:
-        day = days[k]
-        lo = gen.day_start_ns(day.date)
+    def check(out) -> list[str]:
+        lo = gen.day_start_ns(today.date)
         hi = lo + gen.NS_PER_DAY - 1
         n_landed = mp.loader.load_ohlcv(spark, raw, symbols, "1m", start=lo, end=hi).count()
-        first = gen.day_start_ns(days[k - 1].date)
+        first = gen.day_start_ns(history.date)
         daily = mp.loader.load_ohlcv(spark, agg, symbols, "1d", start=first, end=hi).collect()
-        expected = {**days[k - 1].daily, **day.daily}
-        return verify.check_increment(day, n_landed, out["errors"].count(), daily, expected)
+        units = jobs.load().filter(mp.F.col("job_id") == INGEST_JOB).select("symbol", "day").collect()
+        return verify.check_increment(
+            today, n_landed, out["errors"].count(), daily, {**history.daily, **today.daily},
+            units, {(s, today.date) for s in symbols})
 
-    def next_op(i: int):
-        k = i + 1
-        return None if k >= len(days) else ("increment", lambda: increment(k))
-
-    run.timed_ops(next_op, lambda i, out: check(i + 1, out), watch_roots=(raw, agg), control_root=ctl)
-    landed = 1 + len(run.ops)
-    run.lake_bytes_per_input_byte = _lake_bytes(run, raw, agg) / sum(in_bytes[:landed])
+    run.timed_ops(lambda i: ("increment", run_increment) if i == 0 else None,
+                  lambda i, out: check(out), watch_roots=(raw, agg), control_root=ctl)
+    run.lake_bytes_per_input_byte = _lake_bytes(run, raw, agg) / in_bytes
     secs = [o.seconds for o in run.ops]
     run.detail.update({
         "increment_s_p50": (statistics.median(secs), "s", len(secs)),
         "ingest_bars_per_s": (run.bars_per_s(), "1/s", len(secs)),
-        "lake_bytes_per_input_byte": (run.lake_bytes_per_input_byte, "ratio", landed),
+        "lake_bytes_per_input_byte": (run.lake_bytes_per_input_byte, "ratio", 2),
     })
 
 
@@ -326,7 +325,6 @@ def query_mix(run: Run) -> None:
                  "agg_files": QUERY_SYMBOLS * QUERY_DAYS * len(QUERY_FRAMES)}
     symbols = gen.symbol_names(QUERY_SYMBOLS)
     day_starts = [gen.day_start_ns(x.date) for x in days]
-    man_rows = pq.read_table(man_path, columns=["min_ts", "max_ts"]).to_pylist()
 
     def collect(df, name: str):
         with run.span(name):
@@ -384,31 +382,35 @@ def query_mix(run: Run) -> None:
         return [] if verify.digest(rows) == expected[spec] else [f"{spec}: result differs from DuckDB"]
 
     plan = query_plan(run.seed, symbols, day_starts, 100_000)
-    # Whole rounds of queries warm the JVM until QUERY_WARMUP_S have passed;
-    # checked, not timed. A shorter warm-up left some runs ~50% slower
-    # throughout, as if still compiling.
-    warmup, t0 = 0, time.perf_counter()
-    while warmup % len(QUERY_KINDS) or time.perf_counter() - t0 < QUERY_WARMUP_S:
-        run.checks.append(check(plan[warmup], execute(plan[warmup])[1]))
-        warmup += 1
+    # QUERY_WARMUP_ROUNDS rounds of queries warm the JVM; checked, not timed.
+    # Latency keeps falling for a minute as the JIT compiles the read path,
+    # so the warm-up is a fixed amount of work rather than a fixed time: a
+    # slow machine then starts timing from the same compiled state.
+    warmup = QUERY_WARMUP_ROUNDS * len(QUERY_KINDS)
+    for spec in plan[:warmup]:
+        run.checks.append(check(spec, execute(spec)[1]))
     timed = plan[warmup:]
-    kept_ratio = []
+    skipping: dict[tuple, dict] = {}  # (lo, hi) -> the program's own file counts
+    kept_ratio: list[float] = []
 
-    def next_op(i: int):
+    def check_timed(i: int, rows) -> list[str]:
         spec = timed[i]
         if spec[0] == "pruned_scan":
-            kept = sum(1 for r in man_rows if r["min_ts"] is None or r["max_ts"] is None
-                       or (r["max_ts"] >= spec[1] and r["min_ts"] <= spec[2]))
-            kept_ratio.append(kept / len(man_rows))
-        return spec[0], lambda: execute(spec)
+            if spec not in skipping:
+                skipping[spec] = mp.manifest.skipping_ratio(manifest, spec[1], spec[2])
+            kept_ratio.append(skipping[spec]["files_kept"] / skipping[spec]["files_total"])
+        return check(spec, rows)
 
+    n_timed = len(QUERY_KINDS) * max(1, round(run.seconds / QUERY_ROUND_S))
     try:
-        run.timed_ops(next_op, lambda i, rows: check(timed[i], rows), round_size=len(QUERY_KINDS))
+        run.timed_ops(lambda i: (timed[i][0], lambda: execute(timed[i])) if i < n_timed else None,
+                      check_timed, round_size=len(QUERY_KINDS))
     finally:
         oracle.close()
     run.lake_bytes_per_input_byte = _lake_bytes(run, raw, agg) / in_bytes
+    files_total = next(iter(skipping.values()))["files_total"] if skipping else 0
     run.detail["pruned_files_kept_ratio"] = (statistics.fmean(kept_ratio) if kept_ratio else 1.0,
-                                             "ratio", len(man_rows))
+                                             "ratio", files_total)
     secs = sorted(o.seconds for o in run.ops)
     p90 = statistics.quantiles(secs, n=10)[-1] if len(secs) >= 2 else secs[-1]
     run.detail.update({
@@ -423,82 +425,7 @@ def query_mix(run: Run) -> None:
     run.detail["lake_bytes_per_input_byte"] = (run.lake_bytes_per_input_byte, "ratio", 1)
 
 
-# ---------------------------------------------------------------------------
-# rebuild_frames
-
-
-def rebuild_frames(run: Run) -> None:
-    mp, spark = run.mp, run.spark
-    for rep in range(SETUP_REPS):
-        d = run.fresh(f"rebuild-{rep}")
-        raw = f"{d}/raw"
-        with run.traced_setup():
-            t0 = time.perf_counter()
-            days = gen.generate_days(run.seed, REBUILD_SYMBOLS, REBUILD_DAYS, violations=False)
-            staged = f"{d}/input.parquet"
-            in_bytes = gen.write_parquet(pa.concat_tables([x.bars for x in days]), staged)
-            mp.lake.write_bars(spark.read.parquet(staged), raw, "1m")
-            run.setup_s.append(time.perf_counter() - t0)
-    n_bars = gen.BARS_PER_DAY * REBUILD_SYMBOLS * REBUILD_DAYS
-    run.sizes = {"symbols": REBUILD_SYMBOLS, "days": REBUILD_DAYS, "bars": n_bars,
-                 "frames": list(REBUILD_FRAMES),
-                 "files_per_rebuild": REBUILD_SYMBOLS * REBUILD_DAYS * len(REBUILD_FRAMES)}
-    validate_s: list[float] = []
-    oracle = verify.Oracle()
-    expected = {f: oracle.expected_frame(raw, f) for f in REBUILD_FRAMES}
-    raw_bytes = _lake_bytes(run, raw)
-    rebuilt_bytes: list[int] = []
-
-    def rebuild(name: str):
-        out = f"{d}/{name}"
-        src = mp.lake.read_bars(spark, raw, frame="1m").select(*COLS)
-        errors = mp.validation.validate_bars(src)
-        with run.span("operators.validation.validate_bars.exec"):
-            t0 = time.perf_counter()
-            n_errors = errors.count()
-            validate_s.append(time.perf_counter() - t0)
-        for frame in REBUILD_FRAMES:
-            mp.lake.write_bars(mp.resample.resample(src, frame), out, frame)
-        built = mp.manifest.build_manifest(spark, out)
-        with run.span("manifest.build_manifest.exec"):
-            built.write.parquet(f"{out}_manifest")
-        return n_bars, (out, n_errors)
-
-    def check(result) -> list[str]:
-        out, n_errors = result
-        i = os.path.basename(out)
-        problems = [] if n_errors == 0 else [f"{i}: {n_errors} error rows on a clean lake"]
-        for frame in REBUILD_FRAMES:
-            got = oracle.actual_frame(out, frame)
-            if got != expected[frame]:
-                problems.append(f"{i} frame {frame}: (rows, checksum) {got} != {expected[frame]}")
-        files = dict(mp.lake.list_lake_files(spark, out))
-        n_manifest = pq.read_table(f"{out}_manifest").num_rows
-        if n_manifest != len(files):
-            problems.append(f"{i}: manifest has {n_manifest} rows for {len(files)} files")
-        rebuilt_bytes.append(sum(files.values()))
-        storage.append(_storage_delta({}, files))
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(f"{out}_manifest", ignore_errors=True)
-        return problems
-
-    storage: list[dict] = []
-    try:
-        run.timed_ops(lambda i: ("rebuild", lambda: rebuild(f"rebuilt-{i}")),
-                      lambda i, result: check(result))
-    finally:
-        oracle.close()
-    run.storage = storage
-    run.lake_bytes_per_input_byte = (raw_bytes + statistics.median(rebuilt_bytes)) / in_bytes
-    run.detail.update({
-        "rebuild_s": (statistics.median(o.seconds for o in run.ops), "s", len(run.ops)),
-        "validate_s": (statistics.median(validate_s), "s", len(validate_s)),
-        "lake_bytes_per_input_byte": (run.lake_bytes_per_input_byte, "ratio", len(rebuilt_bytes)),
-    })
-
-
 WORKLOADS = {
     "ingest_daily": ingest_daily,
     "query_mix": query_mix,
-    "rebuild_frames": rebuild_frames,
 }
