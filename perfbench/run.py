@@ -12,10 +12,11 @@ operation, e.g. ``increment_s_p50``, ``query_s_p90``), each with its sample
 count, plus sizes and environment; then the result line with ``correct``,
 ``attempted``, ``failed`` and ``metrics``.
 
-``ingest_daily`` times exactly one increment per run. ``query_mix`` times
-whole rounds of its four query kinds, as many as ``--seconds`` divided by
-the nominal length of a round; the count never depends on how fast the
-machine is, so every run of a seed times the same work.
+``ingest_daily`` times two increments per run, one after each of the last
+two set-ups. ``query_mix`` times whole rounds of its four query kinds, as
+many as ``--seconds`` divided by the nominal length of a round; the count
+never depends on how fast the machine is, so every run of a seed times the
+same work.
 
 The result line carries metrics every workload has, so each can be compared
 on each workload:

@@ -129,6 +129,18 @@ def test_round_medians():
     assert run.bars_per_s() == 10.0
 
 
+def test_timed_ops_add_up_over_calls():
+    import workloads
+
+    run = workloads.Run(None, None, "", 0, 0.0)
+    seen = []
+    for rep in range(3):
+        run.timed_ops(lambda i: ("increment", lambda: (10, rep)) if i == 0 else None,
+                      lambda i, out: seen.append((i, out)) or [])
+    assert [o.kind for o in run.ops] == ["increment"] * 3
+    assert seen == [(0, 0), (0, 1), (0, 2)]
+
+
 def test_self_time_arithmetic():
     spans = [
         Span(0, None, "root", 0, 0.0, 10.0),

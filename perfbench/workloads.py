@@ -8,8 +8,10 @@
   manifest-pruned scans over a lake written during set-up. The read path.
 
 Each workload function takes a :class:`Run`, sets up ``SETUP_REPS`` times
-into fresh directories (keeping the last), runs a fixed number of timed
-operations and checks every operation's output outside the timed region.
+into fresh directories, runs a fixed number of timed operations and checks
+every operation's output outside the timed region. ``ingest_daily`` times an
+increment after each of its last set-ups; ``query_mix`` queries the last
+set-up's lake.
 """
 
 from __future__ import annotations
@@ -30,6 +32,7 @@ import verify
 SETUP_REPS = 3
 
 INGEST_SYMBOLS = 6
+INGEST_INCREMENTS = 2  # timed, one after each of the last set-ups
 INGEST_JOB = "ingest-stream"  # the increment resumes from this job's checkpoint
 INGEST_FRAMES = ("5m", "1h", "1d")
 
@@ -112,7 +115,8 @@ class Run:
         and runs untimed after each operation. In a traced run, file
         counters are taken between operations. The number of operations is
         the workload's to fix, never a deadline's, so a faster or slower
-        machine times the same work.
+        machine times the same work. Operations of repeated calls add up in
+        ``ops``.
         """
         self.round_size = round_size
         listing = self._listing(watch_roots) if self.tracer else None
@@ -120,13 +124,14 @@ class Run:
         while (spec := next_op(i)) is not None:
             kind, fn = spec
             traced = self.tracer is not None
-            with _tracing(self.tracer, i) if traced else contextlib.nullcontext():
+            op_id = len(self.ops)
+            with _tracing(self.tracer, op_id) if traced else contextlib.nullcontext():
                 t0 = time.perf_counter()
                 bars, out = fn()
                 wall = time.perf_counter() - t0
             extra = 0.0
             if traced:
-                mine = [s for s in self.tracer.spans if s.op == i]
+                mine = [s for s in self.tracer.spans if s.op == op_id]
                 self.tracer.collect_counts(mine)
                 extra = sum(s.dur for s in mine if s.extra)
             op = Op(kind, wall - extra, bars)
@@ -182,18 +187,28 @@ def _lake_bytes(run: Run, *roots: str) -> int:
 
 
 def ingest_daily(run: Run) -> None:
-    """Set-up stages two days of input and lands day 0 as history with
+    """Each of ``SETUP_REPS`` repetitions sets up into fresh directories; the
+    last ``INGEST_INCREMENTS`` of them then time one increment there. The
+    first set-up, the JVM's coldest, only warms the write path: an increment
+    costs about four warm set-ups, and one after every set-up would make a
+    run too long for the benchmark's time budget.
+
+    Set-up stages two days of input and lands day 0 as history with
     ``write_bars`` (raw 1m and the aggregate frames), then saves the stream
     job's checkpoint at day 0's last bar, as day 0's ingest under the same
     job id would have left it. The increment is day 1, whose input re-sends
     the tail of day 0: the checkpoint drops that slice.
 
-    A run times exactly this one increment, the first of its process, as a
-    daily ingest process would run it, whatever ``seconds`` is: every run
-    measures the same work from the same point in the process's life."""
+    Every increment does the same work from the same lake and control state,
+    whatever ``seconds`` is; only the process's age differs (the first one
+    is the first increment of its process, as a daily ingest process would
+    run it). ``op_s_p50`` is their median."""
     mp, spark = run.mp, run.spark
     inc = mp.incremental
     symbols = gen.symbol_names(INGEST_SYMBOLS)
+    run.sizes = {"symbols": INGEST_SYMBOLS, "bars_per_increment": gen.BARS_PER_DAY * INGEST_SYMBOLS,
+                 "resent_bars": gen.RESEND_MINUTES * INGEST_SYMBOLS,
+                 "frames": ["1m", *INGEST_FRAMES], "history_days": 1, "increments": INGEST_INCREMENTS}
     for rep in range(SETUP_REPS):
         d = run.fresh(f"ingest-{rep}")
         raw, agg, ctl = f"{d}/raw", f"{d}/agg", f"{d}/raw_ctl"
@@ -213,33 +228,33 @@ def ingest_daily(run: Run) -> None:
             checkpoints = inc.CheckpointStore(spark, f"{ctl}/checkpoints")
             checkpoints.save(INGEST_JOB, gen.last_ts(history.clean))
             run.setup_s.append(time.perf_counter() - t0)
-    run.sizes = {"symbols": INGEST_SYMBOLS, "bars_per_increment": gen.BARS_PER_DAY * INGEST_SYMBOLS,
-                 "resent_bars": gen.RESEND_MINUTES * INGEST_SYMBOLS,
-                 "frames": ["1m", *INGEST_FRAMES], "history_days": 1}
-    jobs = mp.control.JobsStore(spark, f"{ctl}/jobs")
-    metrics = mp.control.MetricsStore(spark, f"{ctl}/metrics")
+        os.sync()  # the set-up's write-back would otherwise land in the timed increment
+        if rep < SETUP_REPS - INGEST_INCREMENTS:
+            continue
+        jobs = mp.control.JobsStore(spark, f"{ctl}/jobs")
+        metrics = mp.control.MetricsStore(spark, f"{ctl}/metrics")
 
-    def run_increment():
-        out = inc.incremental_job(
-            spark, INGEST_JOB, increment, raw, agg, checkpoints,
-            frames=list(INGEST_FRAMES), market_hours=False, jobs=jobs, metrics=metrics,
-            provider="perfbench", feed="perfbench",
-        )
-        return today.n_valid, out
+        def run_increment():
+            out = inc.incremental_job(
+                spark, INGEST_JOB, increment, raw, agg, checkpoints,
+                frames=list(INGEST_FRAMES), market_hours=False, jobs=jobs, metrics=metrics,
+                provider="perfbench", feed="perfbench",
+            )
+            return today.n_valid, out
 
-    def check(out) -> list[str]:
-        lo = gen.day_start_ns(today.date)
-        hi = lo + gen.NS_PER_DAY - 1
-        n_landed = mp.loader.load_ohlcv(spark, raw, symbols, "1m", start=lo, end=hi).count()
-        first = gen.day_start_ns(history.date)
-        daily = mp.loader.load_ohlcv(spark, agg, symbols, "1d", start=first, end=hi).collect()
-        units = jobs.load().filter(mp.F.col("job_id") == INGEST_JOB).select("symbol", "day").collect()
-        return verify.check_increment(
-            today, n_landed, out["errors"].count(), daily, {**history.daily, **today.daily},
-            units, {(s, today.date) for s in symbols})
+        def check(out) -> list[str]:
+            lo = gen.day_start_ns(today.date)
+            hi = lo + gen.NS_PER_DAY - 1
+            n_landed = mp.loader.load_ohlcv(spark, raw, symbols, "1m", start=lo, end=hi).count()
+            first = gen.day_start_ns(history.date)
+            daily = mp.loader.load_ohlcv(spark, agg, symbols, "1d", start=first, end=hi).collect()
+            units = jobs.load().filter(mp.F.col("job_id") == INGEST_JOB).select("symbol", "day").collect()
+            return verify.check_increment(
+                today, n_landed, out["errors"].count(), daily, {**history.daily, **today.daily},
+                units, {(s, today.date) for s in symbols})
 
-    run.timed_ops(lambda i: ("increment", run_increment) if i == 0 else None,
-                  lambda i, out: check(out), watch_roots=(raw, agg), control_root=ctl)
+        run.timed_ops(lambda i: ("increment", run_increment) if i == 0 else None,
+                      lambda i, out: check(out), watch_roots=(raw, agg), control_root=ctl)
     run.lake_bytes_per_input_byte = _lake_bytes(run, raw, agg) / in_bytes
     secs = [o.seconds for o in run.ops]
     run.detail.update({
@@ -320,6 +335,7 @@ def query_mix(run: Run) -> None:
             manifest = spark.read.parquet(man_path)
             mp.views.ensure_views(spark, agg)
             run.setup_s.append(time.perf_counter() - t0)
+    os.sync()  # the set-up's write-back would otherwise land in the timed queries
     run.sizes = {"symbols": QUERY_SYMBOLS, "days": QUERY_DAYS,
                  "raw_partitions": QUERY_SYMBOLS * QUERY_DAYS,
                  "agg_files": QUERY_SYMBOLS * QUERY_DAYS * len(QUERY_FRAMES)}
@@ -387,28 +403,30 @@ def query_mix(run: Run) -> None:
     # so the warm-up is a fixed amount of work rather than a fixed time: a
     # slow machine then starts timing from the same compiled state.
     warmup = QUERY_WARMUP_ROUNDS * len(QUERY_KINDS)
-    for spec in plan[:warmup]:
-        run.checks.append(check(spec, execute(spec)[1]))
-    timed = plan[warmup:]
     skipping: dict[tuple, dict] = {}  # (lo, hi) -> the program's own file counts
-    kept_ratio: list[float] = []
 
-    def check_timed(i: int, rows) -> list[str]:
-        spec = timed[i]
-        if spec[0] == "pruned_scan":
-            if spec not in skipping:
-                skipping[spec] = mp.manifest.skipping_ratio(manifest, spec[1], spec[2])
-            kept_ratio.append(skipping[spec]["files_kept"] / skipping[spec]["files_total"])
+    def checked(spec, rows) -> list[str]:
+        # Warm-up runs the same untimed checks as the timed region: a code
+        # path first met between timed queries would be JIT-compiled during
+        # the queries after it.
+        if spec[0] == "pruned_scan" and spec not in skipping:
+            skipping[spec] = mp.manifest.skipping_ratio(manifest, spec[1], spec[2])
         return check(spec, rows)
+
+    for spec in plan[:warmup]:
+        run.checks.append(checked(spec, execute(spec)[1]))
+    timed = plan[warmup:]
 
     n_timed = len(QUERY_KINDS) * max(1, round(run.seconds / QUERY_ROUND_S))
     try:
         run.timed_ops(lambda i: (timed[i][0], lambda: execute(timed[i])) if i < n_timed else None,
-                      check_timed, round_size=len(QUERY_KINDS))
+                      lambda i, rows: checked(timed[i], rows), round_size=len(QUERY_KINDS))
     finally:
         oracle.close()
     run.lake_bytes_per_input_byte = _lake_bytes(run, raw, agg) / in_bytes
     files_total = next(iter(skipping.values()))["files_total"] if skipping else 0
+    kept_ratio = [skipping[spec]["files_kept"] / skipping[spec]["files_total"]
+                  for spec in timed[:n_timed] if spec[0] == "pruned_scan"]
     run.detail["pruned_files_kept_ratio"] = (statistics.fmean(kept_ratio) if kept_ratio else 1.0,
                                              "ratio", files_total)
     secs = sorted(o.seconds for o in run.ops)
