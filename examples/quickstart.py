@@ -65,8 +65,8 @@ def run(workdir: str) -> None:
     print(f"\nreport at {report}")
 
     # 5. Inspect job states and recorded metrics (control plane).
-    step("Job states", ["jobs", "--path", f"{raw}_ctl/jobs"])
-    step("Metrics recorded", ["metrics", "--path", f"{raw}_ctl/metrics"])
+    step("Job states", ["jobs", "--db", f"{raw}_ctl/control.db"])
+    step("Metrics recorded", ["metrics", "--db", f"{raw}_ctl/control.db"])
 
     print("\nQuickstart complete.")
 

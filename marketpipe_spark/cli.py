@@ -42,10 +42,28 @@ def cmd_query(args) -> int:
     return 0
 
 
+#: Lake root ``ingest-ohlcv`` writes when neither --output nor a config names one.
+DEFAULT_RAW_ROOT = "data/raw"
+
+
+def control_db(lake_root: str) -> str:
+    """The SQLite file holding a lake's jobs, metrics and checkpoints. It
+    lives BESIDE the lake root (``<lake>_ctl/``): inside it, it would
+    confuse partition discovery."""
+    return f"{lake_root.rstrip('/')}_ctl/control.db"
+
+
+def _control_stores(spark, lake_root: str) -> dict:
+    from .control import CheckpointStore, JobsStore, MetricsStore
+
+    db = control_db(lake_root)
+    return {"checkpoints": CheckpointStore(spark, db), "jobs": JobsStore(spark, db),
+            "metrics": MetricsStore(spark, db)}
+
+
 def cmd_ingest(args) -> int:
-    from .control import JobsStore, MetricsStore
     from .sources.fake import fake_bars
-    from .streaming.incremental import CheckpointStore, incremental_job
+    from .streaming.incremental import incremental_job
 
     # config/flag merge (reference cli/ohlcv_ingest.py:459-520): a YAML file
     # supplies the job; explicit flags override it field by field. Without
@@ -77,7 +95,7 @@ def cmd_ingest(args) -> int:
         symbols = [s.strip().upper() for s in args.symbols.split(",")]
         provider = args.provider or "fake"
         feed = args.feed or "iex"
-        output = args.output or "data/raw"
+        output = args.output or DEFAULT_RAW_ROOT
         start_iso = args.start
         n_bars = args.bars or 390
     if provider != "fake":
@@ -90,16 +108,9 @@ def cmd_ingest(args) -> int:
     start_ns = int(dt.datetime.fromisoformat(start_iso).replace(tzinfo=dt.timezone.utc).timestamp() * 1e9)
     bars = fake_bars(spark, symbols, start_ns, n_bars)
     job_id = args.job_id or f"ingest-{start_iso}"
-    # control tables live BESIDE the lake root (`<output>_ctl/`): inside it
-    # they would confuse partition discovery, and Spark's file index ignores
-    # underscore-prefixed paths entirely.
-    ctl = f"{output.rstrip('/')}_ctl"
     outputs = incremental_job(
         spark, job_id, bars, output, args.agg_root,
-        CheckpointStore(spark, f"{ctl}/checkpoints"),
-        jobs=JobsStore(spark, f"{ctl}/jobs"),
-        metrics=MetricsStore(spark, f"{ctl}/metrics"),
-        provider="fake", feed=feed, market_hours=False,
+        **_control_stores(spark, output), provider="fake", feed=feed, market_hours=False,
     )
     n_err = outputs["errors"].count()
     print(f"job {job_id}: ingested {n_bars} bars x {len(symbols)} symbols, "
@@ -108,12 +119,10 @@ def cmd_ingest(args) -> int:
 
 
 def cmd_backfill(args) -> int:
-    from .control import JobsStore, MetricsStore
     from .sources.fake import fake_minute_bars_for_day
-    from .streaming.incremental import CheckpointStore, backfill_gaps
+    from .streaming.incremental import backfill_gaps
 
     spark = _spark("backfill")
-    ctl = f"{args.output.rstrip('/')}_ctl"
     fetch = lambda syms, d: fake_minute_bars_for_day(
         spark, syms,
         int(dt.datetime(d.year, d.month, d.day, tzinfo=dt.timezone.utc).timestamp() * 1e9),
@@ -121,9 +130,7 @@ def cmd_backfill(args) -> int:
     filled = backfill_gaps(
         spark, args.output, args.agg_root,
         dt.date.fromisoformat(args.start), dt.date.fromisoformat(args.end),
-        CheckpointStore(spark, f"{ctl}/checkpoints"), fetch,
-        jobs=JobsStore(spark, f"{ctl}/jobs"), metrics=MetricsStore(spark, f"{ctl}/metrics"),
-        market_hours=False,
+        fetch_day=fetch, **_control_stores(spark, args.output), market_hours=False,
     )
     if not filled:
         print("no gaps found")
@@ -179,23 +186,6 @@ def cmd_prune(args) -> int:
     return 0
 
 
-def _sql_store(spark, db: str, kind: str):
-    """Pick the SQL control-plane backend from the --db value: a
-    ``postgresql://``/``postgres://`` DSN selects the Postgres dialect
-    (the reference's DATABASE_URL convention, alembic/env.py); anything
-    else is a SQLite file path."""
-    from . import control_sql as cs
-
-    is_pg = cs.is_postgres_dsn(db)
-    cls = {
-        ("jobs", False): cs.SqliteJobsStore,
-        ("jobs", True): cs.PostgresJobsStore,
-        ("metrics", False): cs.SqliteMetricsStore,
-        ("metrics", True): cs.PostgresMetricsStore,
-    }[(kind, is_pg)]
-    return cls(spark, db)
-
-
 def cmd_manifest(args) -> int:
     from .manifest import build_manifest, skipping_ratio
 
@@ -217,13 +207,9 @@ def cmd_manifest(args) -> int:
 
 
 def cmd_jobs(args) -> int:
-    spark = _spark("jobs")
-    if args.db:
-        jobs = _sql_store(spark, args.db, "jobs")
-    else:
-        from .control import JobsStore
+    from .control import JobsStore
 
-        jobs = JobsStore(spark, args.path)
+    jobs = JobsStore(_spark("jobs"), args.db)
     if args.job_id:
         rows = [r for r in jobs.load().collect() if r.job_id == args.job_id]
         if not rows:
@@ -259,13 +245,9 @@ def cmd_symbols(args) -> int:
 
 
 def cmd_metrics(args) -> int:
-    spark = _spark("metrics")
-    if args.db:
-        m = _sql_store(spark, args.db, "metrics")
-    else:
-        from .control import MetricsStore
+    from .control import MetricsStore
 
-        m = MetricsStore(spark, args.path)
+    m = MetricsStore(_spark("metrics"), args.db)
     if args.serve:
         from .metrics_server import MetricsServer
 
@@ -320,33 +302,16 @@ def cmd_providers(args) -> int:
 
 def cmd_migrate(args) -> int:
     """Apply pending control-store schema migrations (reference
-    cli/utils.py:263-276 → migrations.apply_pending; here additive parquet
-    schema evolution via control.migrate_control_store). With ``--db`` the
-    SQL backend is migrated instead (upgrade, or ``--downgrade <version>``
-    for the alembic-style reverse path)."""
-    if getattr(args, "db", None):
-        from . import control_sql as cs
+    cli/utils.py:263-276 → migrations.apply_pending), or with
+    ``--downgrade <version>`` revert them (alembic-style reverse path)."""
+    from .control import apply_pending, downgrade_to
 
-        is_pg = cs.is_postgres_dsn(args.db)
-        dialect = cs.PostgresDialect(args.db) if is_pg else cs.SqliteDialect(args.db)
-        if getattr(args, "downgrade", None):
-            reverted = cs.downgrade_to_dialect(dialect, args.downgrade)
-            print(
-                f"reverted: {', '.join(reverted) if reverted else 'nothing (already at or below target)'}"
-            )
-        else:
-            applied = cs.apply_pending_dialect(dialect)
-            print(f"applied: {', '.join(applied) if applied else 'nothing (up-to-date)'}")
-        return 0
-
-    from .control import migrate_control_store
-
-    spark = _spark("migrate")
-    report = migrate_control_store(spark, args.path)
-    for table, action in report:
-        print(f"{table}: {action}")
-    if all(action in ("absent", "up-to-date") for _, action in report):
-        print("Migrations up-to-date")
+    if args.downgrade:
+        reverted = downgrade_to(args.db, args.downgrade)
+        print(f"reverted: {', '.join(reverted) if reverted else 'nothing (already at or below target)'}")
+    else:
+        applied = apply_pending(args.db)
+        print(f"applied: {', '.join(applied) if applied else 'nothing (up-to-date)'}")
     return 0
 
 
@@ -687,7 +652,7 @@ def cmd_factory_reset(args) -> int:
     """Wipe lake + control-plane data (reference cli/factory_reset.py —
     scoped to the EXPLICIT roots given, not a cwd glob; requires
     --confirm-nuclear unless --dry-run)."""
-    from .lake import _hadoop_fs, list_lake_files
+    from .lake import _hadoop_fs
 
     if not args.dry_run and not args.confirm_nuclear:
         print("refusing: pass --confirm-nuclear to wipe, or --dry-run to preview", file=sys.stderr)
@@ -696,18 +661,19 @@ def cmd_factory_reset(args) -> int:
     roots: list[str] = []
     for r in args.roots:
         roots.append(r)
-        roots.append(f"{r.rstrip('/')}_ctl")  # control tables live beside the lake
+        roots.append(f"{r.rstrip('/')}_ctl")  # the control DB lives beside the lake
     total_files = total_bytes = 0
     for root in roots:
-        files = list_lake_files(spark, root)
-        if not files:
+        fs, hpath, _ = _hadoop_fs(spark, root)
+        if not fs.exists(hpath):
             continue
-        nbytes = sum(sz for _, sz in files)
-        total_files += len(files)
-        total_bytes += nbytes
-        print(f"{root}: {len(files)} files, {nbytes / 1e6:.1f} MB")
+        sizes, it = [], fs.listFiles(hpath, True)  # every file, not only .parquet
+        while it.hasNext():
+            sizes.append(it.next().getLen())
+        total_files += len(sizes)
+        total_bytes += sum(sizes)
+        print(f"{root}: {len(sizes)} files, {sum(sizes) / 1e6:.1f} MB")
         if not args.dry_run:
-            fs, hpath, _ = _hadoop_fs(spark, root)
             fs.delete(hpath, True)
     verb = "would delete" if args.dry_run else "deleted"
     print(f"{verb} {total_files} files, {total_bytes / 1e6:.1f} MB total")
@@ -729,6 +695,10 @@ def _deprecated(fn, old: str, new: str):
     return wrap
 
 
+_DB_HELP = ("control DB: SQLite file path (ingest writes <output>_ctl/control.db) "
+            "or postgresql:// DSN")
+
+
 def _add_ingest_args(i: argparse.ArgumentParser) -> None:
     i.add_argument("--config", default=None, help="YAML job config (flags override it)")
     i.add_argument("--provider", default=None)
@@ -745,7 +715,7 @@ def _add_ingest_args(i: argparse.ArgumentParser) -> None:
 def _add_backfill_args(bf: argparse.ArgumentParser) -> None:
     bf.add_argument("--start", required=True, help="ISO date")
     bf.add_argument("--end", required=True, help="ISO date")
-    bf.add_argument("--output", default="data/raw")
+    bf.add_argument("--output", default=DEFAULT_RAW_ROOT)
     bf.add_argument("--agg-root", default="data/agg")
     bf.set_defaults(fn=cmd_backfill)
 
@@ -835,8 +805,7 @@ def build_parser() -> argparse.ArgumentParser:
 
     j = sub.add_parser("jobs", help="job state summary / details")
     j.add_argument("job_id", nargs="?", default=None)
-    j.add_argument("--path", default="data/raw_ctl/jobs")
-    j.add_argument("--db", default=None, help="control DB instead of parquet --path: SQLite file path or postgresql:// DSN")
+    j.add_argument("--db", default=control_db(DEFAULT_RAW_ROOT), help=_DB_HELP)
     j.set_defaults(fn=cmd_jobs)
 
     s = sub.add_parser("symbols", help="update the SCD-2 symbols master")
@@ -857,8 +826,7 @@ def build_parser() -> argparse.ArgumentParser:
 
     m = sub.add_parser("metrics", help="metric names / history / Prometheus endpoint")
     m.add_argument("name", nargs="?", default=None)
-    m.add_argument("--path", default="data/raw_ctl/metrics")
-    m.add_argument("--db", default=None, help="control DB instead of parquet --path: SQLite file path or postgresql:// DSN")
+    m.add_argument("--db", default=control_db(DEFAULT_RAW_ROOT), help=_DB_HELP)
     m.add_argument("--serve", action="store_true", help="serve GET /metrics (Prometheus text format)")
     m.add_argument("--port", type=int, default=8000)
     m.add_argument("--host", default="127.0.0.1", help="bind address (0.0.0.0 inside containers)")
@@ -868,10 +836,9 @@ def build_parser() -> argparse.ArgumentParser:
     pv.set_defaults(fn=cmd_providers)
 
     mg = sub.add_parser("migrate", help="apply pending control-store schema migrations")
-    mg.add_argument("--path", "-p", default="data/raw_ctl", help="control-store root")
-    mg.add_argument("--db", default=None, help="SQL backend instead: SQLite path or postgresql:// DSN")
+    mg.add_argument("--db", default=control_db(DEFAULT_RAW_ROOT), help=_DB_HELP)
     mg.add_argument("--downgrade", default=None, metavar="VERSION",
-                    help="revert SQL migrations above VERSION ('000' reverts all); requires --db")
+                    help="revert migrations above VERSION ('000' reverts all)")
     mg.set_defaults(fn=cmd_migrate)
 
     c = sub.add_parser(

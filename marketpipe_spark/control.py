@@ -1,4 +1,4 @@
-"""Control plane: ingestion-job state machine + metrics history.
+"""Control plane: ingestion jobs, checkpoints and metrics history as SQL rows.
 
 Reference semantics reproduced:
 - ``ProcessingState`` and transition guards (ingestion/domain/entities.py:
@@ -10,29 +10,47 @@ Reference semantics reproduced:
 - Metrics repository (metrics.py:131-255): ``record`` appends
   (ts, name, value, provider, feed); ``get_metrics_history`` /
   ``get_average_metrics`` / ``get_performance_trends`` become the shared
-  DataFrame functions below, so the SAME code path serves the parquet store
-  and the registry's oracle-checked entries.
+  DataFrame functions below, so the SAME code path serves the stores and
+  the registry's oracle-checked entries.
+- Checkpoints (sqlite_domain.py:447-501): per-(job, symbol) resume
+  positions, upserted keep-newest.
 
-Storage: the reference keeps these rows in SQLite. Here they are tiny
-parquet control tables (same pattern as ``streaming.incremental.
-CheckpointStore``) — driver-side rewrite is deliberate and bounded: the
-tables hold one row per (job, symbol, day) / metric point, never data-plane
-volume. On a cluster the natural home is a catalog-backed table; the query
-functions take any DataFrame and do not care.
+Storage: the reference keeps these rows in SQLite OR Postgres behind
+repository classes selected by DATABASE_URL (alembic/env.py), with an
+idempotent file-versioned migration runner (migrations/__init__.py:16-100
+``apply_pending``; versions/001_core_schema.sql,
+003_provider_feed_labels.sql, 005_ingestion_jobs_sqlite.sql). Here every
+store takes ``(spark, path)``: a Postgres DSN (:func:`is_postgres_dsn`)
+selects Postgres (multi-host; driver import-gated — psycopg/psycopg2 — or
+an injected DB-API ``connect_factory``), anything else is a SQLite file
+(single host, concurrent writers serialized). The CLI keeps all three
+stores in one file, ``<lake>_ctl/control.db``.
+
+Each write is one short transaction (SQLite: BEGIN IMMEDIATE; Postgres:
+MVCC), so a crash mid-write leaves the previous rows. Reads materialize into
+Spark DataFrames with fixed schemas, so every query function below is
+backend-agnostic. The rows are control-plane-sized (one per job×symbol×day,
+metric point or job×symbol), so no write launches a Spark job.
+
+Canonical SQL is written with ``?`` placeholders and a ``{MAX2}`` macro for
+the two-argument scalar max (SQLite ``MAX(a,b)``, Postgres
+``GREATEST(a,b)``); dialects translate. No other statement differs.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 import os
+import re
+import sqlite3
 import time
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .schema import METRICS_SCHEMA
-
-from pyspark.sql import types as T
 
 JOB_STATES = ("pending", "in_progress", "completed", "failed", "cancelled")
 
@@ -58,100 +76,434 @@ JOBS_SCHEMA = T.StructType(
     ]
 )
 
+CHECKPOINT_SCHEMA = T.StructType(
+    [
+        T.StructField("job_id", T.StringType(), False),
+        T.StructField("symbol", T.StringType(), False),
+        T.StructField("last_processed_ns", T.LongType(), False),
+        T.StructField("updated_at", T.TimestampType(), False),
+    ]
+)
+
+# ---------------------------------------------------------------------------
+# migrations (reference migrations/__init__.py:16-100, embedded rather than
+# sibling .sql files so the package stays single-directory). The DDL below
+# is the portable intersection of the reference's sqlite and postgres
+# variants (001_core_schema.sql / 005_ingestion_jobs_sqlite.sql).
+
+MIGRATIONS: dict[str, str] = {
+    # core schema (reference versions/001_core_schema.sql + 005_...jobs)
+    "001": """
+CREATE TABLE IF NOT EXISTS ingestion_jobs (
+    job_id TEXT NOT NULL,
+    symbol TEXT NOT NULL,
+    day DATE NOT NULL,
+    state TEXT NOT NULL DEFAULT 'pending'
+        CHECK (state IN ('pending','in_progress','completed','failed','cancelled')),
+    created_at TIMESTAMP NOT NULL,
+    updated_at TIMESTAMP NOT NULL,
+    error_message TEXT,
+    bars_processed BIGINT,
+    UNIQUE(job_id, symbol, day)
+);
+CREATE TABLE IF NOT EXISTS metrics (
+    ts BIGINT NOT NULL,
+    name TEXT NOT NULL,
+    value DOUBLE PRECISION NOT NULL
+);
+CREATE TABLE IF NOT EXISTS checkpoints (
+    job_id TEXT NOT NULL,
+    symbol TEXT NOT NULL,
+    last_processed_ns BIGINT NOT NULL,
+    updated_at TIMESTAMP NOT NULL,
+    PRIMARY KEY (job_id, symbol)
+);
+CREATE INDEX IF NOT EXISTS idx_jobs_job ON ingestion_jobs(job_id);
+CREATE INDEX IF NOT EXISTS idx_metrics_ts_name ON metrics(ts, name);
+CREATE INDEX IF NOT EXISTS idx_metrics_name ON metrics(name);
+""",
+    # provider/feed labels (reference versions/003_provider_feed_labels.sql)
+    "002": """
+ALTER TABLE metrics ADD COLUMN provider TEXT NOT NULL DEFAULT 'unknown';
+ALTER TABLE metrics ADD COLUMN feed TEXT NOT NULL DEFAULT 'unknown';
+""",
+}
+
+#: Reverse scripts, one per version (reference alembic ``downgrade()``
+#: functions; both dialects support ALTER TABLE DROP COLUMN — SQLite since
+#: 3.35). Downgrading is destructive by nature: 002's columns are dropped
+#: with their data, 001 removes the control tables entirely.
+DOWNGRADES: dict[str, str] = {
+    "002": """
+ALTER TABLE metrics DROP COLUMN provider;
+ALTER TABLE metrics DROP COLUMN feed;
+""",
+    "001": """
+DROP INDEX IF EXISTS idx_jobs_job;
+DROP INDEX IF EXISTS idx_metrics_ts_name;
+DROP INDEX IF EXISTS idx_metrics_name;
+DROP TABLE IF EXISTS ingestion_jobs;
+DROP TABLE IF EXISTS metrics;
+DROP TABLE IF EXISTS checkpoints;
+""",
+}
+
+
+# ---------------------------------------------------------------------------
+# dialects
+
+#: Postgres DSN shapes: libpq URLs plus SQLAlchemy-style driver-qualified
+#: forms (postgresql+psycopg2://...) — the reference's DATABASE_URL
+#: convention produces both.
+_PG_DSN_RE = re.compile(r"^postgres(ql)?(\+\w+)?://")
+_URI_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*://")
+
+
+def is_postgres_dsn(db: str) -> bool:
+    """True for any postgres-flavored URL (mis-sniffing one as a SQLite
+    file path would mkdir a junk 'postgresql+psycopg2:' directory and
+    silently serve an empty database)."""
+    return bool(_PG_DSN_RE.match(db))
+
+
+def normalize_pg_dsn(dsn: str) -> str:
+    """Strip the SQLAlchemy ``+driver`` qualifier — psycopg wants plain
+    ``postgresql://``."""
+    return _PG_DSN_RE.sub("postgresql://", dsn)
+
+
+class SqliteDialect:
+    """File-backed SQLite: ``?`` placeholders, BEGIN IMMEDIATE write lock."""
+
+    name = "sqlite"
+
+    def __init__(self, db_path: str | os.PathLike):
+        self.db_path = os.fspath(db_path)
+        # Both would misbehave silently: sqlite3 cannot open a directory (a
+        # Parquet control table from before the SQL stores), and a
+        # hdfs:// or s3a:// URI would become a junk local 's3a:' directory.
+        if _URI_RE.match(self.db_path):
+            raise ValueError(
+                f"control store {self.db_path!r} is a URI but not a Postgres DSN; "
+                "SQLite needs a local file path"
+            )
+        if os.path.isdir(self.db_path):
+            raise ValueError(
+                f"control store {self.db_path!r} is a directory (a Parquet control "
+                "table?); pass a SQLite file path such as <lake>_ctl/control.db"
+            )
+        parent = os.path.dirname(self.db_path)
+        if parent:
+            os.makedirs(parent, exist_ok=True)
+
+    def connect(self):
+        return sqlite3.connect(self.db_path, timeout=30.0)
+
+    def sql(self, q: str) -> str:
+        return q.replace("{MAX2}", "MAX")
+
+    def begin_write(self, con) -> None:
+        # Takes the write lock up front so concurrent writers serialize
+        # instead of failing mid-transaction.
+        con.execute("BEGIN IMMEDIATE")
+
+    def executescript(self, con, script: str) -> None:
+        # NOT sqlite3's Connection.executescript: that API commits the open
+        # transaction first and runs in autocommit, so a mid-script failure
+        # leaves earlier statements applied with no schema_version row —
+        # permanently wedging the migration runner ("duplicate column" on
+        # every retry). And Python's implicit-transaction rule covers DML
+        # only — DDL outside an open transaction autocommits — so an
+        # explicit BEGIN is required for the per-version rollback guarantee
+        # (SQLite DDL is transactional once inside one).
+        cur = con.cursor()
+        if not con.in_transaction:
+            cur.execute("BEGIN")
+        for stmt in script.split(";"):
+            if stmt.strip():
+                cur.execute(stmt)
+
+
+class PostgresDialect:
+    """Server Postgres: ``%s`` placeholders, MVCC transactions, GREATEST.
+
+    ``dsn`` is a libpq connection string / URL handed to psycopg (v3) or
+    psycopg2, whichever is importable — both are import-gated since neither
+    ships in minimal deployments. ``connect_factory`` injects any DB-API
+    connection source instead (a pool, a test substitute), mirroring how the
+    reference's repositories take an engine/session rather than building
+    their own (reference: postgres_domain.py repository constructors).
+    """
+
+    name = "postgres"
+
+    def __init__(self, dsn: str | None = None, connect_factory=None):
+        if dsn is None and connect_factory is None:
+            raise ValueError("PostgresDialect needs a dsn or a connect_factory")
+        self.dsn = normalize_pg_dsn(dsn) if dsn is not None else None
+        self._factory = connect_factory
+
+    def connect(self):
+        if self._factory is not None:
+            return self._factory()
+        try:
+            import psycopg  # type: ignore[import-not-found]
+
+            return psycopg.connect(self.dsn)
+        except ImportError:
+            try:
+                import psycopg2  # type: ignore[import-not-found]
+
+                return psycopg2.connect(self.dsn)
+            except ImportError as e:
+                raise ImportError(
+                    "Postgres backend needs psycopg (v3) or psycopg2 installed, "
+                    "or pass connect_factory="
+                ) from e
+
+    def sql(self, q: str) -> str:
+        return q.replace("?", "%s").replace("{MAX2}", "GREATEST")
+
+    def begin_write(self, con) -> None:
+        pass  # DB-API transactions are implicit; commit/rollback by caller
+
+    def executescript(self, con, script: str) -> None:
+        cur = con.cursor()
+        for stmt in script.split(";"):
+            if stmt.strip():
+                cur.execute(stmt)
+
+
+def dialect_for(db: str | os.PathLike, connect_factory=None):
+    """The dialect a store argument names: a Postgres DSN (or an injected
+    ``connect_factory``) selects Postgres, anything else is a SQLite file."""
+    db = os.fspath(db)
+    if connect_factory is not None or is_postgres_dsn(db):
+        return PostgresDialect(db, connect_factory)
+    return SqliteDialect(db)
+
+
+def apply_pending_dialect(dialect) -> list[str]:
+    """Apply unapplied migrations in version order, one transaction each,
+    tracked in ``schema_version`` (reference apply_pending semantics:
+    idempotent, rollback-per-version on failure). Returns applied versions."""
+    applied: list[str] = []
+    con = dialect.connect()
+    try:
+        cur = con.cursor()
+        cur.execute(
+            "CREATE TABLE IF NOT EXISTS schema_version ("
+            "version TEXT PRIMARY KEY, applied_at TIMESTAMP NOT NULL)"
+        )
+        con.commit()
+        cur.execute("SELECT version FROM schema_version")
+        done = {r[0] for r in cur.fetchall()}
+        for version in sorted(MIGRATIONS):
+            if version in done:
+                continue
+            try:
+                dialect.executescript(con, MIGRATIONS[version])
+                cur = con.cursor()
+                cur.execute(
+                    dialect.sql(
+                        "INSERT INTO schema_version(version, applied_at) VALUES (?, ?)"
+                    ),
+                    (version, dt.datetime.now(dt.timezone.utc).isoformat()),
+                )
+                con.commit()
+                applied.append(version)
+            except Exception as e:
+                con.rollback()
+                raise RuntimeError(f"migration {version} failed: {e}") from e
+    finally:
+        con.close()
+    return applied
+
+
+def apply_pending(db: str | os.PathLike) -> list[str]:
+    """:func:`apply_pending_dialect` for a store argument (SQLite path or
+    Postgres DSN)."""
+    return apply_pending_dialect(dialect_for(db))
+
+
+def downgrade_to_dialect(dialect, target: str) -> list[str]:
+    """Revert applied migrations ABOVE ``target`` in reverse order, one
+    transaction each (reference alembic ``downgrade`` semantics). ``target``
+    of ``"000"`` (or any version below the first) reverts everything.
+    Returns the reverted versions, newest first.
+    """
+    if target != "000" and target not in MIGRATIONS:
+        raise ValueError(f"unknown target version: {target!r}")
+    reverted: list[str] = []
+    con = dialect.connect()
+    try:
+        cur = con.cursor()
+        try:
+            cur.execute("SELECT version FROM schema_version")
+        except Exception:
+            con.rollback()
+            return []  # never migrated -> nothing to revert
+        done = sorted((r[0] for r in cur.fetchall()), reverse=True)
+        for version in done:
+            if version <= target:
+                continue
+            if version not in DOWNGRADES:
+                raise RuntimeError(f"no downgrade script for version {version}")
+            try:
+                dialect.executescript(con, DOWNGRADES[version])
+                cur = con.cursor()
+                cur.execute(
+                    dialect.sql("DELETE FROM schema_version WHERE version = ?"),
+                    (version,),
+                )
+                con.commit()
+                reverted.append(version)
+            except Exception as e:
+                con.rollback()
+                raise RuntimeError(f"downgrade {version} failed: {e}") from e
+    finally:
+        con.close()
+    return reverted
+
+
+def downgrade_to(db: str | os.PathLike, target: str) -> list[str]:
+    """:func:`downgrade_to_dialect` for a store argument."""
+    return downgrade_to_dialect(dialect_for(db), target)
+
+
+def applied_versions(db_path: str | os.PathLike) -> list[str]:
+    with sqlite3.connect(os.fspath(db_path)) as con:
+        try:
+            return sorted(r[0] for r in con.execute("SELECT version FROM schema_version"))
+        except sqlite3.OperationalError:
+            return []
+
+
+# ---------------------------------------------------------------------------
+# stores
 
 def _now() -> dt.datetime:
     return dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
 
 
-def _exists(spark: SparkSession, path: str) -> bool:
-    """Hadoop FS existence (os.path is blind to hdfs:///s3a:// paths)."""
-    from .lake import _hadoop_fs
-
-    fs, hpath, _ = _hadoop_fs(spark, path)
-    return fs.exists(hpath)
+def _parse_ts(v) -> dt.datetime | None:
+    if v is None or isinstance(v, dt.datetime):
+        return v
+    return dt.datetime.fromisoformat(v)
 
 
-def _read_table(spark: SparkSession, path: str, schema) -> DataFrame:
-    """Read a control table, recovering from the ``.old`` generation if a
-    crash landed between :func:`_rewrite`'s two renames."""
-    if _exists(spark, path):
-        return spark.read.parquet(path)
-    if _exists(spark, path + ".old"):
-        return spark.read.parquet(path + ".old")
-    return spark.createDataFrame([], schema)
+def _parse_day(v) -> dt.date:
+    if isinstance(v, dt.datetime):
+        return v.date()
+    if isinstance(v, dt.date):
+        return v
+    return dt.date.fromisoformat(v)
 
 
-def _rewrite(spark: SparkSession, df: DataFrame, path: str) -> None:
-    """Crash-safe replace of a tiny control table.
+class _Executor:
+    """Thin cursor wrapper translating canonical SQL per dialect."""
 
-    A bare ``mode('overwrite')`` on the destination deletes its files
-    BEFORE the job commits — a driver kill in that window loses all job
-    state. Instead: fully materialize the new generation beside the old
-    one, then swap by rename (atomic on HDFS/posix). A crash between the
-    two renames leaves ``.old`` in place, which :func:`_read_table`
-    recovers from. (This is the single-writer parquet backend; the SQL
-    backends in control_sql.py own the concurrent-writer story.)
-    """
-    from .lake import _hadoop_fs
+    def __init__(self, cur, dialect):
+        self._cur = cur
+        self._dialect = dialect
 
-    tmp, old = path + ".tmp", path + ".old"
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    fs, hpath, jvm = _hadoop_fs(spark, path)
-    hadoop_path = jvm.org.apache.hadoop.fs.Path
-    htmp, hold = hadoop_path(tmp), hadoop_path(old)
-    fs.delete(hold, True)
-    if fs.exists(hpath):
-        fs.rename(hpath, hold)
-    fs.rename(htmp, hpath)
-    fs.delete(hold, True)
+    def execute(self, sql: str, params: tuple = ()):
+        self._cur.execute(self._dialect.sql(sql), params)
+        return self._cur
+
+    def executemany(self, sql: str, seq) -> None:
+        self._cur.executemany(self._dialect.sql(sql), seq)
 
 
-class JobsStore:
-    """Ingestion-job control table, one row per (job_id, symbol, day)
-    (reference ingestion_jobs table, infrastructure/repositories/
-    sqlite_domain.py:56-120; state machine entities.py:254-335)."""
+class _SqlStore:
+    """``(spark, path)``: ``path`` is a SQLite file path or a Postgres DSN
+    (see :func:`dialect_for`); the schema is migrated on construction."""
 
-    def __init__(self, spark: SparkSession, path: str):
+    def __init__(self, spark: SparkSession, path: str, connect_factory=None):
         self.spark = spark
         self.path = path
+        self.dialect = dialect_for(path, connect_factory)
+        apply_pending_dialect(self.dialect)
+
+    @contextmanager
+    def _tx(self):
+        """One write transaction: all of the block's statements commit, or
+        none do. Yields an :class:`_Executor`."""
+        con = self.dialect.connect()
+        try:
+            self.dialect.begin_write(con)
+            yield _Executor(con.cursor(), self.dialect)
+            con.commit()
+        except Exception:
+            con.rollback()
+            raise
+        finally:
+            con.close()
+
+    def _read(self, sql: str, params: tuple = ()) -> list[tuple]:
+        con = self.dialect.connect()
+        try:
+            cur = con.cursor()
+            cur.execute(self.dialect.sql(sql), params)
+            return cur.fetchall()
+        finally:
+            con.close()
+
+
+class JobsStore(_SqlStore):
+    """Ingestion jobs, one row per (job_id, symbol, day) (reference
+    ingestion_jobs table, sqlite_domain.py:56-120; state machine
+    entities.py:254-335). Each transition is one transaction over all of
+    the job's rows."""
 
     def load(self) -> DataFrame:
-        return _read_table(self.spark, self.path, JOBS_SCHEMA)
-
-    def _rows(self) -> list:
-        return self.load().collect()
+        rows = [
+            (j, s, _parse_day(d), st, _parse_ts(c), _parse_ts(u), e, b)
+            for j, s, d, st, c, u, e, b in self._read(
+                "SELECT job_id, symbol, day, state, created_at, updated_at, "
+                "error_message, bars_processed FROM ingestion_jobs"
+            )
+        ]
+        return self.spark.createDataFrame(rows, JOBS_SCHEMA)
 
     def create(self, job_id: str, symbol_days: list[tuple[str, dt.date]]) -> None:
         """Register a job's (symbol, day) work units in state 'pending'."""
-        rows = self._rows()
-        if any(r.job_id == job_id for r in rows):
-            raise ValueError(f"job {job_id!r} already exists")
-        now = _now()
-        new = [(job_id, s, d, "pending", now, now, None, None) for s, d in symbol_days]
-        df = self.load().unionByName(self.spark.createDataFrame(new, JOBS_SCHEMA))
-        _rewrite(self.spark, df, self.path)
+        now = _now().isoformat()
+        with self._tx() as x:
+            n = x.execute(
+                "SELECT COUNT(*) FROM ingestion_jobs WHERE job_id = ?", (job_id,)
+            ).fetchone()[0]
+            if n:
+                raise ValueError(f"job {job_id!r} already exists")
+            x.executemany(
+                "INSERT INTO ingestion_jobs (job_id, symbol, day, state, created_at, updated_at)"
+                " VALUES (?, ?, ?, 'pending', ?, ?)",
+                [(job_id, s, d.isoformat(), now, now) for s, d in symbol_days],
+            )
 
     def _transition(self, job_id: str, verb: str, error: str | None = None,
                     bars: dict[tuple[str, dt.date], int] | None = None) -> None:
-        rows = self._rows()
-        mine = [r for r in rows if r.job_id == job_id]
-        if not mine:
-            raise ValueError(f"job {job_id!r} not found")
-        for r in mine:
-            if r.state not in _CAN[verb]:
-                raise ValueError(f"Cannot {verb} job in state {r.state}")
-        now = _now()
         target = _TARGET[verb]
-        out = []
-        for r in rows:
-            if r.job_id != job_id:
-                out.append(tuple(r))
-                continue
-            n = bars.get((r.symbol, r.day)) if bars else r.bars_processed
-            out.append((r.job_id, r.symbol, r.day, target, r.created_at, now,
-                        error if verb == "fail" else r.error_message,
-                        n if n is not None else r.bars_processed))
-        _rewrite(self.spark, self.spark.createDataFrame(out, JOBS_SCHEMA), self.path)
+        with self._tx() as x:
+            mine = x.execute(
+                "SELECT symbol, day, state, bars_processed FROM ingestion_jobs WHERE job_id = ?",
+                (job_id,),
+            ).fetchall()
+            if not mine:
+                raise ValueError(f"job {job_id!r} not found")
+            for _s, _d, state, _b in mine:
+                if state not in _CAN[verb]:
+                    raise ValueError(f"Cannot {verb} job in state {state}")
+            now = _now().isoformat()
+            for s, d, _state, b in mine:
+                day = _parse_day(d)
+                n = bars.get((s, day)) if bars else b
+                x.execute(
+                    "UPDATE ingestion_jobs SET state = ?, updated_at = ?, error_message = ?,"
+                    " bars_processed = ? WHERE job_id = ? AND symbol = ? AND day = ?",
+                    (target, now, error if verb == "fail" else None,
+                     n if n is not None else b, job_id, s, day.isoformat()),
+                )
 
     def start(self, job_id: str) -> None:
         self._transition(job_id, "start")
@@ -169,22 +521,22 @@ class JobsStore:
         return job_state_counts(self.load())
 
 
-class MetricsStore:
-    """Append-only metrics history (reference metrics.py:145-156 — SQLite
-    INSERT becomes a parquet append; the table is control-plane-sized)."""
-
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
+class MetricsStore(_SqlStore):
+    """Append-only metrics history (reference metrics.py:145-156); ``record``
+    is the reference's single INSERT."""
 
     def load(self) -> DataFrame:
-        return _read_table(self.spark, self.path, METRICS_SCHEMA)
+        rows = self._read("SELECT ts, name, value, provider, feed FROM metrics")
+        return self.spark.createDataFrame(rows, METRICS_SCHEMA)
 
     def record(self, name: str, value: float, provider: str = "unknown",
                feed: str = "unknown", ts: int | None = None) -> None:
         ts = int(time.time()) if ts is None else int(ts)
-        row = self.spark.createDataFrame([(ts, name, float(value), provider, feed)], METRICS_SCHEMA)
-        row.coalesce(1).write.mode("append").parquet(self.path)
+        with self._tx() as x:
+            x.execute(
+                "INSERT INTO metrics (ts, name, value, provider, feed) VALUES (?, ?, ?, ?, ?)",
+                (ts, name, float(value), provider, feed),
+            )
 
     def history(self, name: str, since_ts: int | None = None) -> DataFrame:
         return metrics_history(self.load(), name, since_ts)
@@ -199,7 +551,41 @@ class MetricsStore:
         return metrics_trend(self.load(), name, now_ts, buckets, bucket_minutes)
 
     def list_names(self) -> list[str]:
-        return [r.name for r in self.load().select("name").distinct().orderBy("name").collect()]
+        return [r[0] for r in self._read("SELECT DISTINCT name FROM metrics ORDER BY name")]
+
+
+class CheckpointStore(_SqlStore):
+    """Per-(job, symbol) resume positions (reference sqlite_domain.py:
+    447-501); ``save`` is one UPSERT transaction keeping the newest position
+    per (job, symbol). Public as ``streaming.incremental.CheckpointStore``."""
+
+    def load(self) -> DataFrame:
+        rows = [
+            (j, s, n, _parse_ts(u))
+            for j, s, n, u in self._read(
+                "SELECT job_id, symbol, last_processed_ns, updated_at FROM checkpoints"
+            )
+        ]
+        return self.spark.createDataFrame(rows, CHECKPOINT_SCHEMA)
+
+    def last_processed(self, job_id: str, symbol: str) -> int | None:
+        rows = self._read(
+            "SELECT last_processed_ns FROM checkpoints WHERE job_id = ? AND symbol = ?",
+            (job_id, symbol),
+        )
+        return rows[0][0] if rows else None
+
+    def save(self, job_id: str, positions: dict[str, int]) -> None:
+        now = _now().isoformat()
+        with self._tx() as x:
+            x.executemany(
+                "INSERT INTO checkpoints (job_id, symbol, last_processed_ns, updated_at)"
+                " VALUES (?, ?, ?, ?)"
+                " ON CONFLICT(job_id, symbol) DO UPDATE SET"
+                "   last_processed_ns = {MAX2}(checkpoints.last_processed_ns, excluded.last_processed_ns),"
+                "   updated_at = excluded.updated_at",
+                [(job_id, s, int(ns), now) for s, ns in positions.items()],
+            )
 
 
 # ---------------------------------------------------------------------------
@@ -330,56 +716,3 @@ def metrics_trend_windowed(m: DataFrame, name: str, buckets: int = 24,
         )
         .orderBy("bucket_id")
     )
-
-
-# ---------------------------------------------------------------------------
-# control-store migrations
-
-def _control_schemas() -> dict[str, T.StructType]:
-    """Canonical schema per control table, keyed by its directory name under
-    the control root (``<lake>_ctl/``)."""
-    from .streaming.incremental import CHECKPOINT_SCHEMA
-
-    return {"jobs": JOBS_SCHEMA, "metrics": METRICS_SCHEMA, "checkpoints": CHECKPOINT_SCHEMA}
-
-
-def migrate_control_store(spark: SparkSession, root: str) -> list[tuple[str, str]]:
-    """Bring every control table under ``root`` up to the current canonical
-    schema (reference ``marketpipe migrate`` → migrations.apply_pending on
-    the SQLite core.db; here the stores are parquet, so a "migration" is
-    additive schema evolution: new canonical columns are appended as typed
-    nulls, existing data and any extra columns are preserved, and types are
-    cast to canonical where the name matches). Idempotent — a second run
-    reports every table ``up-to-date``.
-
-    Returns [(table, action)] with action in
-    {'absent', 'up-to-date', 'migrated: +col1,+col2', 'migrated: cast(col)'}.
-    """
-    report: list[tuple[str, str]] = []
-    for table, schema in _control_schemas().items():
-        path = os.path.join(root, table)
-        if not _exists(spark, path):
-            report.append((table, "absent"))
-            continue
-        df = spark.read.parquet(path)
-        have = {f.name: f.dataType for f in df.schema.fields}
-        added, casted = [], []
-        cols = []
-        for f in schema.fields:
-            if f.name not in have:
-                cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-                added.append(f.name)
-            elif have[f.name] != f.dataType:
-                cols.append(F.col(f.name).cast(f.dataType).alias(f.name))
-                casted.append(f.name)
-            else:
-                cols.append(F.col(f.name))
-        canonical = {f.name for f in schema.fields}
-        extras = [F.col(c) for c in df.columns if c not in canonical]
-        if not added and not casted:
-            report.append((table, "up-to-date"))
-            continue
-        _rewrite(spark, df.select(*cols, *extras), path)
-        parts = [f"+{c}" for c in added] + [f"cast({c})" for c in casted]
-        report.append((table, "migrated: " + ",".join(parts)))
-    return report

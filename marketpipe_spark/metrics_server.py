@@ -5,7 +5,7 @@ src/marketpipe/metrics_server.py:34-240 — an HTTP server exposing
 ``/metrics`` in Prometheus text exposition format, plus request counting
 and error handling) on the stdlib: ``prometheus_client`` is not a baked-in
 dependency here, so the exposition format (text/plain; version=0.0.4) is
-rendered directly from the parquet-backed :class:`~marketpipe_spark.
+rendered directly from the SQL-backed :class:`~marketpipe_spark.
 control.MetricsStore` rows.
 
 Exported series per recorded metric name (sanitized to the Prometheus

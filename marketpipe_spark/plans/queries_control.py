@@ -1,5 +1,5 @@
 """Control-plane query shapes (A10 job-state counts, A7/A8 metrics) run
-through the SAME functions the parquet-backed stores use (``control.py``),
+through the SAME functions the SQL-backed stores use (``control.py``),
 so the driver's oracle gate checks the real code path.
 
 The driver only registers the testdata tables, so these entries derive a

@@ -8,9 +8,10 @@ data (parquet_engine.py:156-173), and event-driven chaining of
 aggregation + validation after ingest
 (aggregation/application/services.py:157-164).
 
-Spark mapping: checkpoints are a tiny parquet control table; the chained
-legs are plain function composition over the ingested slice (the reference's
-in-memory event bus is an implementation detail, SURVEY §7.3). For a true
+Spark mapping: checkpoints are SQL rows in the control plane
+(``control.CheckpointStore``, public here under the same name); the chained
+legs are plain function composition over the ingested slice (the
+reference's in-memory event bus is an implementation detail, SURVEY §7.3). For a true
 streaming source, ``incremental_job`` drops in behind Structured Streaming's
 ``foreachBatch`` unchanged.
 """
@@ -18,70 +19,13 @@ streaming source, ``incremental_job`` drops in behind Structured Streaming's
 from __future__ import annotations
 
 import datetime as dt
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from ..control import CheckpointStore
 
 NS_DAY = 86_400_000_000_000
-
-CHECKPOINT_SCHEMA = T.StructType(
-    [
-        T.StructField("job_id", T.StringType(), False),
-        T.StructField("symbol", T.StringType(), False),
-        T.StructField("last_processed_ns", T.LongType(), False),
-        T.StructField("updated_at", T.TimestampType(), False),
-    ]
-)
-
-
-class CheckpointStore:
-    """Per-(job, symbol) resume positions in a small parquet table
-    (reference SQLite checkpoints, sqlite_domain.py:447-501)."""
-
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
-
-    def load(self) -> DataFrame:
-        # Shared crash-safe reader: Hadoop-FS existence (os.path is blind
-        # to hdfs/s3a paths) + recovery from the .old generation if a save
-        # crashed mid-swap.
-        from ..control import _read_table
-
-        return _read_table(self.spark, self.path, CHECKPOINT_SCHEMA)
-
-    def last_processed(self, job_id: str, symbol: str) -> int | None:
-        rows = (
-            self.load()
-            .filter((F.col("job_id") == job_id) & (F.col("symbol") == symbol))
-            .agg(F.max("last_processed_ns"))
-            .collect()
-        )
-        return rows[0][0]
-
-    def save(self, job_id: str, positions: dict[str, int]) -> None:
-        """Upsert new positions (keep-newest per (job, symbol))."""
-        now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
-        new = self.spark.createDataFrame(
-            [(job_id, s, int(ns), now) for s, ns in positions.items()], CHECKPOINT_SCHEMA
-        )
-        merged = (
-            self.load()
-            .unionByName(new)
-            .groupBy("job_id", "symbol")
-            .agg(
-                F.max("last_processed_ns").alias("last_processed_ns"),
-                F.max("updated_at").alias("updated_at"),
-            )
-        )
-        # Shared crash-safe rename-swap (control._rewrite): the new
-        # generation is fully written beside the old one before any rename;
-        # a kill mid-swap is recovered by _read_table's .old fallback.
-        from ..control import _rewrite
-
-        _rewrite(self.spark, merged, self.path)
 
 
 def incremental_job(

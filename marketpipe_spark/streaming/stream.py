@@ -449,24 +449,24 @@ def dedup_stream(
     - pairs are written to ``pairs_path/batch=<id>`` with overwrite, so a
       replayed batch rewrites its own partition instead of appending
       duplicates;
-    - the store swap is the control-plane two-rename pattern (materialize
-      the new generation beside the old, rename old → .old, tmp → live) —
+    - the store swap is a two-rename pattern (materialize the new
+      generation beside the old, rename old → .old, tmp → live) —
       a crash mid-swap leaves ``.old`` to recover from, and
       ``minhash_incremental_pairs`` is retry-idempotent against a store
       that already absorbed the batch (batch ids are anti-joined out
       before the union).
 
-    Unlike the tiny control tables, the store scales with the corpus, so
-    the new generation keeps its natural partitioning (no coalesce(1)).
+    The store scales with the corpus, so the new generation keeps its
+    natural partitioning (no coalesce(1)).
     Returns the started StreamingQuery.
     """
-    from ..control import _exists
     from ..lake import _hadoop_fs
     from ..operators.dedup import minhash_incremental_pairs
 
     def _load_store(spark) -> DataFrame:
         for p in (store_path, store_path + ".old"):
-            if _exists(spark, p):
+            fs, hpath, _ = _hadoop_fs(spark, p)
+            if fs.exists(hpath):
                 return spark.read.parquet(p)
         return spark.createDataFrame([], f"{id_col} long, sig array<bigint>")
 

@@ -5,11 +5,25 @@ tests/integration/test_cli_command_matrix.py style). Runs in-process via
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 
 from pyspark.sql import functions as F
 
-from marketpipe_spark.cli import main
+from marketpipe_spark.cli import DEFAULT_RAW_ROOT, build_parser, main
+
+
+def test_cli_control_db_defaults_name_the_file_ingest_writes():
+    """`jobs`, `metrics` and `migrate` read, by default, the control DB that
+    `ingest-ohlcv` and `backfill` write with their default output."""
+    p = build_parser()
+    expected = f"{DEFAULT_RAW_ROOT}_ctl/control.db"
+    assert p.parse_args(["backfill", "--start", "2024-01-02", "--end", "2024-01-03"]).output \
+        == DEFAULT_RAW_ROOT
+    for cmd in ("jobs", "metrics", "migrate"):
+        args = p.parse_args([cmd])
+        assert args.db == expected
+        assert not hasattr(args, "path")
 
 
 def test_cli_health_check(spark, tmp_path, capsys):
@@ -22,9 +36,11 @@ def test_cli_health_check(spark, tmp_path, capsys):
 
 
 def test_cli_factory_reset(spark, tmp_path, capsys):
+    from marketpipe_spark.control import JobsStore
+
     raw = str(tmp_path / "raw")
     spark.range(10).write.parquet(f"{raw}/frame=1m/x")
-    spark.range(5).write.parquet(f"{raw}_ctl/jobs")
+    JobsStore(spark, f"{raw}_ctl/control.db").create("j1", [("AAPL", dt.date(2024, 1, 2))])
 
     # refuses without --confirm-nuclear
     rc = main(["factory-reset", raw])
@@ -33,15 +49,14 @@ def test_cli_factory_reset(spark, tmp_path, capsys):
     # dry-run previews, deletes nothing
     rc = main(["factory-reset", raw, "--dry-run"])
     out = capsys.readouterr().out
-    assert rc == 0 and "would delete" in out
+    assert rc == 0 and "would delete" in out and f"{raw}_ctl: 1 files" in out
     assert spark.read.parquet(f"{raw}/frame=1m/x").count() == 10
+    assert os.path.exists(f"{raw}_ctl/control.db")
 
     # real wipe removes lake AND control sibling
     rc = main(["factory-reset", raw, "--confirm-nuclear"])
     out = capsys.readouterr().out
     assert rc == 0 and "deleted" in out
-    import os
-
     assert not os.path.exists(raw) and not os.path.exists(f"{raw}_ctl")
 
 
@@ -58,13 +73,15 @@ def test_cli_end_to_end(spark, tmp_path, capsys):
     out = capsys.readouterr().out
     assert rc == 0 and "job job-e2e" in out and "ingested 60 bars" in out
 
-    # jobs summary (A10 shape) + detail
-    rc = main(["jobs", "--path", f"{raw}_ctl/jobs"])
+    # jobs summary (A10 shape) + detail, from the control DB the ingest wrote
+    db = f"{raw}_ctl/control.db"
+    rc = main(["jobs", "--db", db])
     out = capsys.readouterr().out
     assert rc == 0 and "completed" in out and "TOTAL" in out
-    rc = main(["jobs", "job-e2e", "--path", f"{raw}_ctl/jobs"])
+    rc = main(["jobs", "job-e2e", "--db", db])
     out = capsys.readouterr().out
     assert rc == 0 and "job-e2e AAPL" in out and "completed" in out
+    assert os.listdir(f"{raw}_ctl") == ["control.db"]  # all three stores, one file
 
     # query over the aggregated views, CSV output
     rc = main([
@@ -100,10 +117,10 @@ def test_cli_end_to_end(spark, tmp_path, capsys):
     assert rc == 0 and "would delete 2 partitions" in out
 
     # metrics recorded by the ingest
-    rc = main(["metrics", "--path", f"{raw}_ctl/metrics"])
+    rc = main(["metrics", "--db", db])
     out = capsys.readouterr().out
     assert rc == 0 and "ingest_job_total_bars" in out
-    rc = main(["metrics", "ingest_job_total_bars", "--path", f"{raw}_ctl/metrics"])
+    rc = main(["metrics", "ingest_job_total_bars", "--db", db])
     out = capsys.readouterr().out
     assert rc == 0
     # 60 bars x 2 symbols minus the handful the validator rejects

@@ -238,7 +238,7 @@ def test_shipped_postgres_env_example_shape():
                 pairs[k] = v
     assert set(pairs) == {"DATABASE_URL", "POSTGRES_TEST_URL"}
     # both values must be DSNs the control-plane dialect selector accepts
-    from marketpipe_spark.control_sql import PostgresDialect
+    from marketpipe_spark.control import PostgresDialect
 
     for v in pairs.values():
         assert v.startswith("postgresql://")

@@ -6,9 +6,11 @@ ingestion/application/services.py:475-491)."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
 
+from marketpipe_spark import control
 from marketpipe_spark.control import JobsStore, MetricsStore
 from marketpipe_spark.streaming.incremental import CheckpointStore, incremental_job
 
@@ -34,6 +36,10 @@ def test_job_lifecycle(spark, tmp_path):
     jobs = JobsStore(spark, str(tmp_path / "jobs"))
     jobs.create("j1", [("AAPL", D1), ("MSFT", D1)])
     assert {r.state for r in jobs.load().collect()} == {"pending"}
+    with pytest.raises(ValueError, match="already exists"):
+        jobs.create("j1", [("IBM", D1)])
+    with pytest.raises(ValueError, match="Cannot complete job in state pending"):
+        jobs.complete("j1")
 
     jobs.start("j1")
     assert {r.state for r in jobs.load().collect()} == {"in_progress"}
@@ -96,17 +102,82 @@ def test_metrics_record_history_average_trend(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
+# crash safety: each store write is one transaction
+
+def test_job_transition_crash_rolls_back_every_unit(spark, tmp_path, monkeypatch):
+    jobs = JobsStore(spark, str(tmp_path / "control.db"))
+    jobs.create("j1", [("AAPL", D1), ("MSFT", D1)])
+    jobs.start("j1")
+    original, updates = control._Executor.execute, []
+
+    def crash_after_first_update(self, sql, params=()):
+        cur = original(self, sql, params)
+        if sql.startswith("UPDATE"):
+            updates.append(params)
+            raise RuntimeError("crash after the first unit's UPDATE")
+        return cur
+
+    monkeypatch.setattr(control._Executor, "execute", crash_after_first_update)
+    with pytest.raises(RuntimeError, match="first unit"):
+        jobs.complete("j1", bars={("AAPL", D1): 10, ("MSFT", D1): 20})
+    monkeypatch.undo()
+    assert len(updates) == 1
+    rows = jobs.load().collect()
+    assert sorted((r.symbol, r.state, r.bars_processed) for r in rows) == [
+        ("AAPL", "in_progress", None), ("MSFT", "in_progress", None)]
+
+
+def test_checkpoint_save_crash_keeps_old_positions(spark, tmp_path, monkeypatch):
+    cps = CheckpointStore(spark, str(tmp_path / "control.db"))
+    cps.save("j1", {"AAPL": 100, "MSFT": 200})
+    original = control._Executor.executemany
+
+    def crash_after_first_symbol(self, sql, rows):
+        original(self, sql, list(rows)[:1])
+        raise RuntimeError("crash after the first symbol's upsert")
+
+    monkeypatch.setattr(control._Executor, "executemany", crash_after_first_symbol)
+    with pytest.raises(RuntimeError, match="first symbol"):
+        cps.save("j1", {"AAPL": 300, "MSFT": 400})
+    monkeypatch.undo()
+    assert (cps.last_processed("j1", "AAPL"), cps.last_processed("j1", "MSFT")) == (100, 200)
+
+
+# ---------------------------------------------------------------------------
+# store arguments that would misbehave silently are refused
+
+def test_store_refuses_a_directory(spark, tmp_path):
+    old_table = tmp_path / "raw_ctl" / "jobs"  # a Parquet control table's directory
+    old_table.mkdir(parents=True)
+    with pytest.raises(ValueError, match="is a directory") as ei:
+        JobsStore(spark, str(old_table))
+    assert str(old_table) in str(ei.value)
+
+
+def test_store_refuses_a_non_postgres_uri(spark, tmp_path, monkeypatch):
+    monkeypatch.chdir(tmp_path)
+    for uri in ("s3a://bucket/raw_ctl/control.db", "hdfs:///lake/raw_ctl/control.db"):
+        with pytest.raises(ValueError, match="not a Postgres DSN") as ei:
+            MetricsStore(spark, uri)
+        assert uri in str(ei.value)
+    assert os.listdir(tmp_path) == []  # no junk 's3a:' / 'hdfs:' directory
+
+
+# ---------------------------------------------------------------------------
 # incremental_job wiring
 
 def test_incremental_job_writes_control_plane(spark, tmp_path):
-    jobs = JobsStore(spark, str(tmp_path / "jobs"))
-    metrics = MetricsStore(spark, str(tmp_path / "metrics"))
-    cps = CheckpointStore(spark, str(tmp_path / "cps"))
-    incremental_job(
+    db = str(tmp_path / "control.db")  # one file for all three stores, as the CLI keeps them
+    jobs = JobsStore(spark, db)
+    metrics = MetricsStore(spark, db)
+    cps = CheckpointStore(spark, db)
+    outputs = incremental_job(
         spark, "job1", _bars(spark, "AAPL", DAY1, 10),
         str(tmp_path / "raw"), str(tmp_path / "agg"), cps,
         jobs=jobs, metrics=metrics, provider="fake", feed="iex",
     )
+    assert outputs["errors"].count() == 0
+    assert cps.last_processed("job1", "AAPL") == DAY1 + 9 * NS_MIN
     jrows = jobs.load().collect()
     assert len(jrows) == 1
     assert jrows[0].state == "completed" and jrows[0].bars_processed == 10
@@ -202,59 +273,6 @@ def test_backfill_gaps_fills_missing_days(spark, tmp_path):
 # ---------------------------------------------------------------------------
 # control-store migrations (reference cli/utils.py:263-276, migrations.apply_pending)
 
-def test_migrate_adds_missing_columns(spark, tmp_path):
-    from marketpipe_spark.control import migrate_control_store
-
-    root = str(tmp_path / "ctl")
-    # jobs table written by an "old" version: no error_message / bars_processed
-    old = spark.createDataFrame(
-        [("j1", "AAPL", D1, "completed", dt.datetime(2024, 1, 2), dt.datetime(2024, 1, 2))],
-        "job_id string, symbol string, day date, state string, "
-        "created_at timestamp, updated_at timestamp",
-    )
-    old.coalesce(1).write.parquet(f"{root}/jobs")
-
-    report = dict(migrate_control_store(spark, root))
-    assert report["jobs"] == "migrated: +error_message,+bars_processed"
-    assert report["metrics"] == "absent"
-    assert report["checkpoints"] == "absent"
-
-    migrated = JobsStore(spark, f"{root}/jobs").load()
-    assert migrated.columns[:8] == [
-        "job_id", "symbol", "day", "state", "created_at", "updated_at",
-        "error_message", "bars_processed",
-    ]
-    row = migrated.collect()[0]
-    assert (row.job_id, row.state) == ("j1", "completed")  # data preserved
-    assert row.error_message is None and row.bars_processed is None
-    # the migrated table is a fully working store
-    assert {r.state for r in JobsStore(spark, f"{root}/jobs").load().collect()} == {"completed"}
-
-
-def test_migrate_idempotent_and_casts(spark, tmp_path):
-    from marketpipe_spark.control import migrate_control_store
-
-    root = str(tmp_path / "ctl")
-    # checkpoints with an int (not long) position and an extra column
-    old = spark.createDataFrame(
-        [("j1", "AAPL", 123, dt.datetime(2024, 1, 2), "keepme")],
-        "job_id string, symbol string, last_processed_ns int, "
-        "updated_at timestamp, custom_note string",
-    )
-    old.coalesce(1).write.parquet(f"{root}/checkpoints")
-
-    report = dict(migrate_control_store(spark, root))
-    assert report["checkpoints"] == "migrated: cast(last_processed_ns)"
-    df = spark.read.parquet(f"{root}/checkpoints")
-    assert dict(df.dtypes)["last_processed_ns"] == "bigint"
-    assert "custom_note" in df.columns  # extra columns preserved
-    assert df.collect()[0].custom_note == "keepme"
-
-    # second run: everything up-to-date
-    report2 = dict(migrate_control_store(spark, root))
-    assert report2["checkpoints"] == "up-to-date"
-
-
 def test_cli_providers_and_migrate(spark, tmp_path, capsys):
     from marketpipe_spark.cli import main
 
@@ -264,11 +282,11 @@ def test_cli_providers_and_migrate(spark, tmp_path, capsys):
     assert "fake" in out and "polygon" in out and "alpaca" in out
     assert "Total:" in out
 
-    root = str(tmp_path / "ctl2")
-    jobs = JobsStore(spark, f"{root}/jobs")
+    db = str(tmp_path / "ctl2" / "control.db")
+    jobs = JobsStore(spark, db)  # a store migrates its file when it opens it
     jobs.create("j1", [("AAPL", D1)])
-    rc = main(["migrate", "--path", root])
+    rc = main(["migrate", "--db", db])
     out = capsys.readouterr().out
     assert rc == 0
-    assert "jobs: up-to-date" in out
-    assert "Migrations up-to-date" in out
+    assert "applied: nothing (up-to-date)" in out
+    assert [r.job_id for r in jobs.load().collect()] == ["j1"]  # rows untouched

@@ -1,7 +1,9 @@
-"""SQLite control-plane backend (reference: src/marketpipe/migrations/
-__init__.py apply_pending, infrastructure/repositories/sqlite_domain.py) —
-drop-in parity with the parquet stores, including running a full
-incremental_job through the SQLite backend."""
+"""SQL control plane below the stores (reference: src/marketpipe/migrations/
+__init__.py apply_pending, infrastructure/repositories/sqlite_domain.py and
+postgres_domain.py): versioned migrations and downgrades, both dialects,
+concurrent writers, keep-newest checkpoints, and a full incremental_job
+through the Postgres dialect. The state machine and the incremental_job
+wiring on SQLite are in test_control_plane.py."""
 
 from __future__ import annotations
 
@@ -11,16 +13,16 @@ import threading
 
 import pytest
 
-from marketpipe_spark.control_sql import (
+from marketpipe_spark.control import (
     MIGRATIONS,
-    SqliteCheckpointStore,
-    SqliteJobsStore,
-    SqliteMetricsStore,
+    CheckpointStore,
+    JobsStore,
+    MetricsStore,
     applied_versions,
     apply_pending,
 )
 
-D1, D2 = dt.date(2024, 1, 2), dt.date(2024, 1, 3)
+D1 = dt.date(2024, 1, 2)
 
 
 # ---------------------------------------------------------------------------
@@ -41,26 +43,10 @@ def test_migration_adds_label_columns(tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# jobs: same state machine as the parquet JobsStore
-
-def test_jobs_lifecycle_and_guards(spark, tmp_path):
-    js = SqliteJobsStore(spark, str(tmp_path / "core.db"))
-    js.create("j1", [("AAPL", D1), ("MSFT", D1)])
-    with pytest.raises(ValueError, match="already exists"):
-        js.create("j1", [("IBM", D2)])
-    with pytest.raises(ValueError, match="Cannot complete job in state pending"):
-        js.complete("j1")
-    js.start("j1")
-    js.complete("j1", bars={("AAPL", D1): 390, ("MSFT", D1): 380})
-    rows = {(r.symbol): r for r in js.load().collect()}
-    assert rows["AAPL"].state == "completed" and rows["AAPL"].bars_processed == 390
-    assert rows["MSFT"].bars_processed == 380
-    counts = {r.state: r.n_jobs for r in js.state_counts().collect()}
-    assert counts == {"completed": 2}
-
+# jobs
 
 def test_jobs_fail_records_error(spark, tmp_path):
-    js = SqliteJobsStore(spark, str(tmp_path / "core.db"))
+    js = JobsStore(spark, str(tmp_path / "core.db"))
     js.create("j2", [("AAPL", D1)])
     js.fail("j2", "boom")
     r = js.load().collect()[0]
@@ -73,7 +59,7 @@ def test_jobs_fail_records_error(spark, tmp_path):
 # metrics: same query functions over SQLite rows
 
 def test_metrics_record_and_query(spark, tmp_path):
-    ms = SqliteMetricsStore(spark, str(tmp_path / "core.db"))
+    ms = MetricsStore(spark, str(tmp_path / "core.db"))
     for ts, v in [(100, 1.0), (200, 3.0), (300, 5.0)]:
         ms.record("ingest.bars", v, provider="fake", feed="iex", ts=ts)
     ms.record("other", 9.0, ts=100)
@@ -85,9 +71,9 @@ def test_metrics_record_and_query(spark, tmp_path):
 
 
 def test_metrics_concurrent_writers(spark, tmp_path):
-    """The reason the SQL backend exists: concurrent writers serialize via
-    IMMEDIATE transactions instead of corrupting a parquet rewrite."""
-    ms = SqliteMetricsStore(spark, str(tmp_path / "core.db"))
+    """Concurrent writers serialize via IMMEDIATE transactions; no write
+    is lost."""
+    ms = MetricsStore(spark, str(tmp_path / "core.db"))
 
     def writer(base):
         for i in range(20):
@@ -105,7 +91,7 @@ def test_metrics_concurrent_writers(spark, tmp_path):
 # checkpoints: keep-newest upsert
 
 def test_checkpoint_upsert_keeps_newest(spark, tmp_path):
-    cs = SqliteCheckpointStore(spark, str(tmp_path / "core.db"))
+    cs = CheckpointStore(spark, str(tmp_path / "core.db"))
     assert cs.last_processed("j", "AAPL") is None
     cs.save("j", {"AAPL": 100, "MSFT": 200})
     cs.save("j", {"AAPL": 50})  # older position must NOT regress
@@ -116,38 +102,15 @@ def test_checkpoint_upsert_keeps_newest(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# e2e: incremental_job runs unchanged against the SQLite backend
-
-def test_incremental_job_with_sqlite_backend(spark, tmp_path):
-    from marketpipe_spark.sources.fake import fake_bars
-    from marketpipe_spark.streaming.incremental import incremental_job
-
-    db = str(tmp_path / "core.db")
-    bars = fake_bars(spark, ["AAPL"], 1_704_202_200_000_000_000, 30)
-    outputs = incremental_job(
-        spark, "sql-job", bars, str(tmp_path / "raw"), str(tmp_path / "agg"),
-        SqliteCheckpointStore(spark, db),
-        jobs=SqliteJobsStore(spark, db),
-        metrics=SqliteMetricsStore(spark, db),
-        provider="fake", feed="iex", market_hours=False,
-    )
-    assert outputs["errors"].count() == 0
-    js = SqliteJobsStore(spark, db)
-    states = {r.state for r in js.load().filter("job_id = 'sql-job'").collect()}
-    assert states == {"completed"}
-    cs = SqliteCheckpointStore(spark, db)
-    assert cs.last_processed("sql-job", "AAPL") is not None
-    ms = SqliteMetricsStore(spark, db)
-    assert "ingest.job.success" in ms.list_names() or len(ms.list_names()) > 0
-
+# CLI over a SQLite file
 
 def test_cli_jobs_and_metrics_against_sqlite(spark, tmp_path, capsys):
     from marketpipe_spark.cli import main
 
     db = str(tmp_path / "core.db")
-    js = SqliteJobsStore(spark, db)
+    js = JobsStore(spark, db)
     js.create("j9", [("AAPL", D1)])
-    SqliteMetricsStore(spark, db).record("ingest.bars", 42.0, ts=100)
+    MetricsStore(spark, db).record("ingest.bars", 42.0, ts=100)
 
     assert main(["jobs", "--db", db]) == 0
     out = capsys.readouterr().out
@@ -206,23 +169,17 @@ class _PgShimConnection:
 
 
 def _pg_stores(spark, tmp_path):
-    from marketpipe_spark.control_sql import (
-        PostgresCheckpointStore,
-        PostgresJobsStore,
-        PostgresMetricsStore,
-    )
-
     path = str(tmp_path / "pg-substitute.db")
     factory = lambda: _PgShimConnection(path)  # noqa: E731
-    return (
-        PostgresJobsStore(spark, connect_factory=factory),
-        PostgresMetricsStore(spark, connect_factory=factory),
-        PostgresCheckpointStore(spark, connect_factory=factory),
-    )
+    dsn = "postgresql://shim/control"
+    stores = tuple(cls(spark, dsn, connect_factory=factory)
+                   for cls in (JobsStore, MetricsStore, CheckpointStore))
+    assert all(st.dialect.name == "postgres" for st in stores)
+    return stores
 
 
 def test_postgres_dialect_translates_sql():
-    from marketpipe_spark.control_sql import PostgresDialect
+    from marketpipe_spark.control import PostgresDialect
 
     d = PostgresDialect(dsn="postgresql://ignored/db")
     assert d.sql("SELECT * FROM t WHERE a = ? AND b = ?") == "SELECT * FROM t WHERE a = %s AND b = %s"
@@ -232,7 +189,7 @@ def test_postgres_dialect_translates_sql():
 def test_postgres_dialect_requires_dsn_or_factory():
     import pytest as _pytest
 
-    from marketpipe_spark.control_sql import PostgresDialect
+    from marketpipe_spark.control import PostgresDialect
 
     with _pytest.raises(ValueError):
         PostgresDialect()
@@ -261,8 +218,7 @@ def test_postgres_backend_checkpoint_upsert_keeps_newest(spark, tmp_path):
 
 
 def test_incremental_job_with_postgres_backend(spark, tmp_path):
-    """The full e2e matrix on the third backend (VERDICT r3 item 7): the
-    same incremental_job drives jobs/metrics/checkpoints through the
+    """The same incremental_job drives jobs/metrics/checkpoints through the
     Postgres dialect unchanged."""
     from marketpipe_spark.sources.fake import fake_bars
     from marketpipe_spark.streaming.incremental import incremental_job
@@ -286,7 +242,7 @@ def test_incremental_job_with_postgres_backend(spark, tmp_path):
 
 
 def test_downgrade_roundtrip(tmp_path):
-    from marketpipe_spark.control_sql import downgrade_to
+    from marketpipe_spark.control import downgrade_to
 
     db = str(tmp_path / "core.db")
     apply_pending(db)
@@ -305,7 +261,7 @@ def test_downgrade_roundtrip(tmp_path):
 
 
 def test_downgrade_to_zero_drops_everything(tmp_path):
-    from marketpipe_spark.control_sql import downgrade_to
+    from marketpipe_spark.control import downgrade_to
 
     db = str(tmp_path / "core.db")
     apply_pending(db)
@@ -325,7 +281,7 @@ def test_downgrade_to_zero_drops_everything(tmp_path):
 def test_downgrade_never_migrated_and_bad_target(tmp_path):
     import pytest as _pytest
 
-    from marketpipe_spark.control_sql import downgrade_to
+    from marketpipe_spark.control import downgrade_to
 
     db = str(tmp_path / "empty.db")
     sqlite3.connect(db).close()
@@ -335,7 +291,7 @@ def test_downgrade_never_migrated_and_bad_target(tmp_path):
 
 
 def test_postgres_downgrade_through_shim(tmp_path):
-    from marketpipe_spark.control_sql import (
+    from marketpipe_spark.control import (
         PostgresDialect,
         apply_pending_dialect,
         downgrade_to_dialect,
@@ -367,7 +323,7 @@ def test_sqlite_migration_failure_rolls_back_whole_version(tmp_path, monkeypatch
     fix: sqlite3.executescript autocommits, permanently wedging the runner
     on retry with 'duplicate column'). After the bad version is fixed,
     apply_pending must succeed — not die on a half-applied script."""
-    from marketpipe_spark import control_sql as cs
+    from marketpipe_spark import control as cs
 
     db = str(tmp_path / "core.db")
     apply_pending(db)
@@ -395,7 +351,7 @@ def test_sqlite_migration_failure_rolls_back_whole_version(tmp_path, monkeypatch
 
 
 def test_postgres_dsn_sniffing_and_normalization():
-    from marketpipe_spark.control_sql import PostgresDialect, is_postgres_dsn, normalize_pg_dsn
+    from marketpipe_spark.control import PostgresDialect, is_postgres_dsn, normalize_pg_dsn
 
     assert is_postgres_dsn("postgresql://u@h/db")
     assert is_postgres_dsn("postgres://u@h/db")

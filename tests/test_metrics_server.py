@@ -1,6 +1,6 @@
 """Prometheus-format metrics endpoint (reference:
 src/marketpipe/metrics_server.py:34-240) — scraped over a real loopback
-HTTP socket against a parquet-backed MetricsStore."""
+HTTP socket against a SQLite-backed MetricsStore."""
 
 from __future__ import annotations
 

@@ -46,10 +46,10 @@ def test_dashboard_json_shape():
 
 
 def test_dashboard_queries_only_series_the_endpoint_exports(spark, tmp_path):
-    from marketpipe_spark.control_sql import SqliteMetricsStore
+    from marketpipe_spark.control import MetricsStore
     from marketpipe_spark.metrics_server import render_prometheus
 
-    store = SqliteMetricsStore(spark, str(tmp_path / "m.db"))
+    store = MetricsStore(spark, str(tmp_path / "m.db"))
     for i, name in enumerate(INGEST_METRIC_NAMES):
         store.record(name, float(i + 1), provider="fake", feed="iex", ts=100 + i)
     body = render_prometheus(store)
@@ -78,6 +78,19 @@ def test_prometheus_and_compose_configs_parse():
     assert set(compose["services"]) == {"marketpipe", "prometheus", "grafana"}
     # the app container must bind 0.0.0.0 for the scraper to reach it
     assert "0.0.0.0" in compose["services"]["marketpipe"]["command"]
+
+
+def test_docker_serves_the_control_db_ingest_writes():
+    from marketpipe_spark.cli import control_db
+
+    expected = control_db("/app/data/raw")  # ingest-ohlcv --output /app/data/raw
+    with open(os.path.join(REPO, "docker", "docker-compose.yml")) as f:
+        app = yaml.safe_load(f)["services"]["marketpipe"]
+    assert app["command"][app["command"].index("--db") + 1] == expected
+    assert "environment" not in app
+    with open(os.path.join(REPO, "docker", "Dockerfile")) as f:
+        cmd = json.loads(next(ln for ln in f if ln.startswith("CMD "))[4:])
+    assert cmd[cmd.index("--db") + 1] == expected
 
 
 def test_grafana_provisioning_parses():
