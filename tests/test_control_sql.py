@@ -2,8 +2,7 @@
 __init__.py apply_pending, infrastructure/repositories/sqlite_domain.py and
 postgres_domain.py): versioned migrations and downgrades, both dialects,
 concurrent writers, keep-newest checkpoints, and a full incremental_job
-through the Postgres dialect. The state machine and the incremental_job
-wiring on SQLite are in test_control_plane.py."""
+through both dialects."""
 
 from __future__ import annotations
 
@@ -22,7 +21,7 @@ from marketpipe_spark.control import (
     apply_pending,
 )
 
-D1 = dt.date(2024, 1, 2)
+D1, D2 = dt.date(2024, 1, 2), dt.date(2024, 1, 3)
 
 
 # ---------------------------------------------------------------------------
@@ -44,6 +43,22 @@ def test_migration_adds_label_columns(tmp_path):
 
 # ---------------------------------------------------------------------------
 # jobs
+
+def test_jobs_lifecycle_and_guards(spark, tmp_path):
+    js = JobsStore(spark, str(tmp_path / "core.db"))
+    js.create("j1", [("AAPL", D1), ("MSFT", D1)])
+    with pytest.raises(ValueError, match="already exists"):
+        js.create("j1", [("IBM", D2)])
+    with pytest.raises(ValueError, match="Cannot complete job in state pending"):
+        js.complete("j1")
+    js.start("j1")
+    js.complete("j1", bars={("AAPL", D1): 390, ("MSFT", D1): 380})
+    rows = {(r.symbol): r for r in js.load().collect()}
+    assert rows["AAPL"].state == "completed" and rows["AAPL"].bars_processed == 390
+    assert rows["MSFT"].bars_processed == 380
+    counts = {r.state: r.n_jobs for r in js.state_counts().collect()}
+    assert counts == {"completed": 2}
+
 
 def test_jobs_fail_records_error(spark, tmp_path):
     js = JobsStore(spark, str(tmp_path / "core.db"))
@@ -99,6 +114,32 @@ def test_checkpoint_upsert_keeps_newest(spark, tmp_path):
     assert cs.last_processed("j", "AAPL") == 100
     assert cs.last_processed("j", "MSFT") == 300
     assert cs.load().count() == 2
+
+
+# ---------------------------------------------------------------------------
+# e2e: incremental_job against a SQLite file
+
+def test_incremental_job_with_sqlite_backend(spark, tmp_path):
+    from marketpipe_spark.sources.fake import fake_bars
+    from marketpipe_spark.streaming.incremental import incremental_job
+
+    db = str(tmp_path / "core.db")
+    bars = fake_bars(spark, ["AAPL"], 1_704_202_200_000_000_000, 30)
+    outputs = incremental_job(
+        spark, "sql-job", bars, str(tmp_path / "raw"), str(tmp_path / "agg"),
+        CheckpointStore(spark, db),
+        jobs=JobsStore(spark, db),
+        metrics=MetricsStore(spark, db),
+        provider="fake", feed="iex", market_hours=False,
+    )
+    assert outputs["errors"].count() == 0
+    js = JobsStore(spark, db)
+    states = {r.state for r in js.load().filter("job_id = 'sql-job'").collect()}
+    assert states == {"completed"}
+    cs = CheckpointStore(spark, db)
+    assert cs.last_processed("sql-job", "AAPL") is not None
+    ms = MetricsStore(spark, db)
+    assert "ingest.job.success" in ms.list_names() or len(ms.list_names()) > 0
 
 
 # ---------------------------------------------------------------------------
