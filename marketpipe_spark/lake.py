@@ -3,9 +3,19 @@ Spark table ops.
 
 Reference layout (parquet_engine.py:19-31,88-95):
 ``<root>/frame=<f>/symbol=<S>/date=<YYYY-MM-DD>/<job_id>.parquet``.
-Spark keeps the same Hive partitioning (frame/symbol/date) — partition
-pruning then makes per-(symbol, day) access free, which is the property all
-the reference's manual path-walking code (S3-S5) was hand-building.
+Spark keeps the same Hive partitioning (frame/symbol/date).
+
+Reads plan from the request, as the reference's loader selects partition
+directories before it scans (loader.py:159-175): ``read_bars`` turns the
+frame, symbols and date bounds into ``root/frame=F/symbol=S[/date=D]``
+paths and reads only those (``basePath=root`` keeps the partition
+columns), so listing costs O(requested partitions), not O(lake). With
+``columns`` (names from ``schema.BARS_MIN_SCHEMA``) the scan takes its
+schema from the request and runs no schema-inference job; without it the
+schema is inferred from the selected files, which write and maintenance
+paths need so they never drop a column. Either way the partition columns
+keep fixed types (``frame``/``symbol`` string, ``date`` date): a lone
+``frame=1d`` directory would otherwise be inferred as a double.
 
 Write semantics reproduced:
 - K1/K3 partitioned write (zstd; task-commit protocol replaces the
@@ -21,14 +31,18 @@ the incoming batch; a 100 TB lake ingesting one day rewrites one day.
 from __future__ import annotations
 
 import datetime as dt
+import functools
+import operator
 import re
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window as W
 
-from .functions import trading_date
+from .functions import NS_PER_DAY, trading_date
+from .schema import BARS_MIN_SCHEMA
 from .session import tune
 
 
@@ -61,6 +75,94 @@ def write_bars(
     )
 
 
+#: The canonical bar columns, in ``schema.BARS_MIN_SCHEMA`` order.
+BAR_COLUMNS = tuple(BARS_MIN_SCHEMA.fieldNames())
+
+#: Fixed types of the Hive partition columns, in directory order.
+_PARTITION_FIELDS = {
+    f.name: f
+    for f in (
+        T.StructField("frame", T.StringType()),
+        T.StructField("symbol", T.StringType()),
+        T.StructField("date", T.DateType()),
+    )
+}
+
+
+def bars_schema(columns=BAR_COLUMNS) -> T.StructType:
+    """Read schema of ``columns`` (names from ``BARS_MIN_SCHEMA``) plus the
+    partition columns, in the order a lake scan returns them."""
+    unknown = sorted(set(columns) - set(BAR_COLUMNS))
+    if unknown:
+        raise ValueError(f"unknown bar columns {unknown}; expected a subset of {list(BAR_COLUMNS)}")
+    data = [
+        T.StructField(f.name, f.dataType)
+        for f in BARS_MIN_SCHEMA.fields
+        if f.name in columns and f.name not in _PARTITION_FIELDS
+    ]
+    return T.StructType(data + list(_PARTITION_FIELDS.values()))
+
+
+def scan_partitions(
+    spark: SparkSession, root: str, paths: list[str], schema: T.StructType | None = None
+) -> DataFrame:
+    """Read partition directories or files under ``root``, keeping the
+    partition columns. Without ``schema`` the data columns are inferred from
+    the files (one Spark job); the partition columns keep their fixed types
+    either way."""
+    tune(spark)
+    if schema is None:
+        inferred = spark.read.option("basePath", root).parquet(*paths).schema
+        schema = T.StructType([_PARTITION_FIELDS.get(f.name, f) for f in inferred])
+    return spark.read.option("basePath", root).schema(schema).parquet(*paths)
+
+
+#: Widest date range a partition glob spells out day by day. A wider or
+#: half-open range globs every date directory of the requested symbols and
+#: leaves the day cut to the partition predicate.
+_GLOB_MAX_DAYS = 366
+
+
+def _partition_glob(
+    root: str,
+    frame: str,
+    symbols: list[str] | None,
+    first_day: dt.date | None,
+    last_day: dt.date | None,
+) -> tuple[str | None, bool]:
+    """Hadoop glob of the partition directories a request reads:
+    ``root/frame=F/symbol={S1,S2}/date={D1,D2,...}``, and whether it names
+    the requested symbols and days exactly. None when the range is empty."""
+    if first_day and last_day and first_day > last_day:
+        return None, True
+    glob = f"{_glob_escape(root)}/frame={_glob_escape(_escape(frame))}"
+    symbol_glob = "/symbol=" + (_alternatives(_escape(s) for s in symbols) if symbols else "*")
+    if first_day is None and last_day is None:
+        return (glob + symbol_glob if symbols else glob), True
+    glob += symbol_glob
+    if first_day and last_day and (last_day - first_day).days < _GLOB_MAX_DAYS:
+        days = (first_day + dt.timedelta(days=n) for n in range((last_day - first_day).days + 1))
+        return glob + "/date=" + _alternatives(d.isoformat() for d in days), True
+    return glob + "/date=*", False
+
+
+def _alternatives(names) -> str:
+    return "{" + ",".join(_glob_escape(n) for n in names) + "}"
+
+
+def _glob_escape(text: str) -> str:
+    return re.sub(r"([\\*?\[\]{},])", r"\\\1", text)
+
+
+#: Characters Spark percent-escapes in a partition directory name
+#: (``ExternalCatalogUtils.escapePathName``).
+_HIVE_ESCAPED = frozenset('"#%\'*/:=?\\\x7f{[]^') | {chr(c) for c in range(1, 0x20)}
+
+
+def _escape(value: str) -> str:
+    return "".join(f"%{ord(c):02X}" if c in _HIVE_ESCAPED else c for c in value)
+
+
 def read_bars(
     spark: SparkSession,
     root: str,
@@ -68,25 +170,74 @@ def read_bars(
     symbols: list[str] | None = None,
     start_ns: int | None = None,
     end_ns: int | None = None,
+    columns: list[str] | None = None,
 ) -> DataFrame:
     """S1-S5 — partition-pruned scan of the lake.
 
-    Filters on frame/symbol/date prune partitions; the ts_ns range predicate
-    additionally pushes to parquet row groups (the reference's
+    With a ``frame``, only the partition directories the request names are
+    listed and read: ``root/frame=F/symbol=S/date=D`` for each of
+    ``symbols`` (every symbol when none are given) and each day of
+    ``[start_ns, end_ns]``, as one Hadoop glob that lists each symbol
+    directory once and keeps the requested ``date=`` children (``basePath``
+    keeps the partition columns). Directories that do not exist are
+    skipped; a request that matches none returns an empty frame. A range
+    wider than ``_GLOB_MAX_DAYS`` or open on one side reads every date
+    directory of the symbols and leaves the day cut to the partition
+    predicate. Without a frame the whole root is read. A missing root
+    raises, as ``spark.read.parquet`` does.
+
+    ``columns`` is a subset of ``schema.BARS_MIN_SCHEMA``'s names (any other
+    name raises ``ValueError``). With it the scan reads those columns plus
+    the partition columns ``frame``/``symbol``/``date`` under a schema built
+    from the request, so no schema-inference job runs. Without it the
+    schema is inferred from the selected files, keeping every column
+    written (``ingest_id`` and the like).
+
+    The ts_ns range predicate pushes to parquet row groups (the reference's
     ``WHERE ts_ns BETWEEN`` pushdown, loader.py:184-192).
     """
-    df = tune(spark).read.parquet(root)
-    if frame is not None:
-        df = df.filter(F.col("frame") == frame)
+    schema = None if columns is None else bars_schema(columns)
     if symbols:
-        df = df.filter(F.col("symbol").isin([s.upper() for s in symbols]))
+        symbols = [s.upper() for s in symbols]
+    first_day = None if start_ns is None else _utc_day(start_ns)
+    last_day = None if end_ns is None else _utc_day(end_ns)
+    fs, hroot, jvm = _hadoop_fs(spark, root)
+    if frame is None or not fs.exists(hroot):
+        paths, exact = [root], False  # a missing root raises here, as it always has
+    else:
+        glob, exact = _partition_glob(root, frame, symbols, first_day, last_day)
+        found = glob and fs.globStatus(jvm.org.apache.hadoop.fs.Path(glob))
+        paths = [glob] if found else []
+    if paths:
+        df = scan_partitions(spark, root, paths, schema)
+    else:
+        df = tune(spark).createDataFrame([], schema or bars_schema())
+    # Partition predicates only where the paths do not already select.
+    conds = []
     if start_ns is not None:
-        df = df.filter(F.col("ts_ns") >= start_ns)
-        df = df.filter(F.col("date") >= dt.datetime.fromtimestamp(start_ns / 1e9, dt.timezone.utc).date())
+        conds.append(F.col("ts_ns") >= start_ns)
     if end_ns is not None:
-        df = df.filter(F.col("ts_ns") <= end_ns)
-        df = df.filter(F.col("date") <= dt.datetime.fromtimestamp(end_ns / 1e9, dt.timezone.utc).date())
-    return df
+        conds.append(F.col("ts_ns") <= end_ns)
+    if not exact:
+        if symbols:
+            conds.append(F.col("symbol").isin(symbols))
+        if first_day is not None:
+            conds.append(F.col("date") >= first_day)
+        if last_day is not None:
+            conds.append(F.col("date") <= last_day)
+    return filter_all(df, conds)
+
+
+def filter_all(df: DataFrame, conds: list) -> DataFrame:
+    """``df`` filtered by the AND of ``conds`` in one call: every DataFrame
+    call is a JVM round trip and a round of plan analysis."""
+    return df.filter(functools.reduce(operator.and_, conds)) if conds else df
+
+
+def _utc_day(ts_ns: int) -> dt.date:
+    """The partition date of ``ts_ns``, in exact integer arithmetic (a float
+    division puts the last nanoseconds of a day on the next one)."""
+    return dt.date(1970, 1, 1) + dt.timedelta(days=ts_ns // NS_PER_DAY)
 
 
 def upsert_bars(new_bars: DataFrame, root: str, frame: str, ingest_id: str | None = None) -> None:
@@ -271,20 +422,11 @@ def compact_partitions(
     doomed = sorted(d for d, n in counts.items() if n > max_files)
     if not doomed:
         return []
-    keys = []
-    for d in doomed:
-        sym = d.split("symbol=")[1].split("/")[0]
-        day = dt.date.fromisoformat(d.rsplit("date=", 1)[-1])
-        keys.append((sym, day))
-    keys_df = spark.createDataFrame(keys, "symbol string, date date")
-    slice_df = (
-        read_bars(spark, root, frame=frame)
-        .join(F.broadcast(keys_df), ["symbol", "date"], "left_semi")
-        .localCheckpoint(eager=True)  # pin before overwriting our own input
-    )
+    # Inferred schema, so no written column is dropped; pinned before the
+    # write overwrites its own input.
+    slice_df = scan_partitions(spark, root, doomed).localCheckpoint(eager=True)
     (
-        slice_df.withColumn("frame", F.lit(frame))
-        .repartition("frame", "symbol", "date")
+        slice_df.repartition("frame", "symbol", "date")
         .sortWithinPartitions("ts_ns")
         .write.mode("overwrite")
         .partitionBy("frame", "symbol", "date")

@@ -12,9 +12,8 @@ from __future__ import annotations
 import datetime as dt
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from .lake import read_bars
+from .lake import BAR_COLUMNS, read_bars
 
 VALID_TIMEFRAMES = ("1m", "5m", "15m", "1h", "1d")
 
@@ -59,6 +58,14 @@ def load_ohlcv(
     (ts_ns, symbol) (loader.py:124-133). ``as_polars=True`` converts the
     pandas result via ``pl.from_pandas`` (reference loader.py:137-139) —
     requires the optional polars dependency.
+
+    The scan lists only the frame's directories of the requested symbols
+    and days (``lake.read_bars``) and reads the seven canonical columns
+    under a fixed schema, so planning runs no schema-inference job and does
+    not grow with the lake; symbols or days without a partition contribute
+    no rows, and a missing ``root`` raises. The rows are sorted inside one
+    partition after a ``repartition(1)``: the order of a global sort
+    without its range-sampling job, while the scan stays parallel.
     """
     if timeframe not in VALID_TIMEFRAMES:
         raise ValueError(f"invalid timeframe {timeframe!r}; expected one of {VALID_TIMEFRAMES}")
@@ -68,18 +75,12 @@ def load_ohlcv(
     start_ns = _to_ns(start) if start is not None else _UNBOUNDED_START
     end_ns = _to_ns(end) if end is not None else _UNBOUNDED_END
 
-    df = read_bars(
-        spark,
-        root,
-        frame=timeframe,
-        symbols=symbols,
-        start_ns=start_ns if start is not None else None,
-        end_ns=end_ns if end is not None else None,
-    )
     df = (
-        df.filter(F.col("ts_ns").between(start_ns, end_ns))
-        .select("symbol", "ts_ns", "open", "high", "low", "close", "volume")
-        .orderBy("ts_ns", "symbol")
+        read_bars(spark, root, frame=timeframe, symbols=symbols,
+                  start_ns=start_ns, end_ns=end_ns, columns=BAR_COLUMNS)
+        .select(*BAR_COLUMNS)
+        .repartition(1)
+        .sortWithinPartitions("ts_ns", "symbol")
     )
     if not (to_pandas or as_polars):
         return df

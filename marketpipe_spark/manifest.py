@@ -31,7 +31,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .lake import list_lake_files
+from .lake import bars_schema, filter_all, list_lake_files, scan_partitions
 from .session import tune
 
 __all__ = ["build_manifest", "prune_files", "read_pruned", "skipping_ratio"]
@@ -161,24 +161,24 @@ def read_pruned(
 ) -> DataFrame:
     """Manifest-pruned lake scan, result-identical to the full filtered read.
 
-    ``basePath`` keeps the Hive partition columns (frame/symbol/date) that
-    a direct file-list read would otherwise lose. The residual ``ts_ns``
-    filter still applies — file skipping is an envelope test, not an exact
-    one — and still pushes down to the surviving files' row groups.
+    Returns the canonical bar columns plus the partition columns
+    (frame/symbol/date), read under a fixed schema from only the surviving
+    files: no listing of the root and no schema-inference job. ``basePath``
+    keeps the Hive partition columns that a direct file-list read would
+    otherwise lose. The residual ``ts_ns`` filter still applies — file
+    skipping is an envelope test, not an exact one — and still pushes down
+    to the surviving files' row groups. No surviving file gives an empty
+    frame of the same shape.
     """
     paths = prune_files(manifest, start_ns, end_ns, max_files=max_files)
     if not paths:
-        return (
-            tune(spark)
-            .read.parquet(root)
-            .filter(F.lit(False))
-        )
-    df = tune(spark).read.option("basePath", root).parquet(*paths)
+        return tune(spark).createDataFrame([], bars_schema())
+    conds = []
     if start_ns is not None:
-        df = df.filter(F.col("ts_ns") >= start_ns)
+        conds.append(F.col("ts_ns") >= start_ns)
     if end_ns is not None:
-        df = df.filter(F.col("ts_ns") <= end_ns)
-    return df
+        conds.append(F.col("ts_ns") <= end_ns)
+    return filter_all(scan_partitions(spark, root, paths, bars_schema()), conds)
 
 
 def skipping_ratio(

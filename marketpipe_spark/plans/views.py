@@ -11,45 +11,34 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
+from ..lake import BAR_COLUMNS, _hadoop_fs, bars_schema, read_bars
 from ..session import tune
 
 VIEW_FRAMES = ("5m", "15m", "1h", "4h", "1d")
 
-#: Empty-view fallback schema (duckdb_views.py:45-51).
-_EMPTY_SCHEMA = T.StructType(
-    [
-        T.StructField("symbol", T.StringType()),
-        T.StructField("ts_ns", T.LongType()),
-        T.StructField("open", T.DoubleType()),
-        T.StructField("high", T.DoubleType()),
-        T.StructField("low", T.DoubleType()),
-        T.StructField("close", T.DoubleType()),
-        T.StructField("volume", T.LongType()),
-        T.StructField("date", T.StringType()),
-    ]
-)
-
 
 def ensure_views(spark: SparkSession, agg_root: str, frames=VIEW_FRAMES) -> list[str]:
-    """Register ``bars_<frame>`` temp views over the aggregated lake; a frame
-    with no partitions gets an empty typed view (duckdb_views.py:65-72)."""
+    """Register ``bars_<frame>`` temp views over the aggregated lake.
+
+    Each view reads ``agg_root/frame=<frame>`` with the canonical columns
+    under a fixed schema (``date`` as a string), so registering runs no
+    probe or schema-inference job. A frame with no directory, or a missing
+    ``agg_root``, gets an empty view of the same typed shape
+    (duckdb_views.py:44-51,65-72).
+    """
     tune(spark)
+    fs, hroot, _ = _hadoop_fs(spark, agg_root)
+    root_exists = fs.exists(hroot)
     created = []
     for frame in frames:
         name = f"bars_{frame}"
-        try:
-            df = (
-                spark.read.parquet(agg_root)
-                .filter(F.col("frame") == frame)
-                .select("symbol", "ts_ns", "open", "high", "low", "close", "volume",
-                        F.col("date").cast("string").alias("date"))
-            )
-            df.head(1)
-        except Exception:
-            df = spark.createDataFrame([], _EMPTY_SCHEMA)
-        df.createOrReplaceTempView(name)
+        if root_exists:
+            df = read_bars(spark, agg_root, frame=frame, columns=BAR_COLUMNS)
+        else:
+            df = spark.createDataFrame([], bars_schema())
+        view = df.select(*BAR_COLUMNS, F.col("date").cast("string").alias("date"))
+        view.createOrReplaceTempView(name)
         created.append(name)
     return created
 

@@ -28,6 +28,10 @@ from ..control import CheckpointStore
 NS_DAY = 86_400_000_000_000
 
 
+def _day_start_ns(day: dt.date) -> int:
+    return (day - dt.date(1970, 1, 1)).days * NS_DAY
+
+
 def incremental_job(
     spark: SparkSession,
     job_id: str,
@@ -64,7 +68,7 @@ def incremental_job(
     checkpoint OUTSIDE [start, end) is stale and ignored — the symbol
     restarts from the window start (reference services.py:475-491).
     """
-    from ..lake import read_bars, upsert_bars
+    from ..lake import BAR_COLUMNS, read_bars, upsert_bars
     from ..operators.resample import resample
     from ..operators.validation import split_valid
 
@@ -114,21 +118,33 @@ def incremental_job(
         valid = valid.localCheckpoint(eager=True)
         upsert_bars(valid, raw_root, "1m", ingest_id=job_id)
 
+        # One tiny control-plane agg: the touched (symbol, day) units feed the
+        # slice read below, the checkpoint advance and the job stats.
+        stats = valid.groupBy("symbol", day).agg(
+            F.max("ts_ns").alias("m"), F.count(F.lit(1)).alias("n")
+        ).collect()
+
         # event-chained legs (function composition, not a bus)
-        touched = valid.select("symbol", day).distinct()
-        if not valid.head(1):
+        if not stats:
             # Empty increment (boundary e2e): nothing landed, and on a brand-
-            # new lake the raw root may not even exist — the slice read would
-            # throw UNABLE_TO_INFER_SCHEMA. The aggregate legs see an empty
-            # slice with the canonical bars shape instead.
-            slice_df = valid.select(
-                "symbol", "ts_ns", "open", "high", "low", "close", "volume"
-            )
+            # new lake the raw root may not even exist. The aggregate legs see
+            # an empty slice with the canonical bars shape instead.
+            slice_df = valid.select(*BAR_COLUMNS)
         else:
+            touched = spark.createDataFrame(
+                [(r.symbol, r.date) for r in stats], "symbol string, date date"
+            )
+            days = [r.date for r in stats]
             slice_df = (
-                read_bars(spark, raw_root, frame="1m")
+                read_bars(
+                    spark, raw_root, frame="1m",
+                    symbols=sorted({r.symbol for r in stats}),
+                    start_ns=_day_start_ns(min(days)),
+                    end_ns=_day_start_ns(max(days)) + NS_DAY - 1,
+                    columns=BAR_COLUMNS,
+                )
                 .join(F.broadcast(touched), ["symbol", "date"], "left_semi")
-                .select("symbol", "ts_ns", "open", "high", "low", "close", "volume")
+                .select(*BAR_COLUMNS)
                 # One lake scan, re-used by every frame's resample below.
                 .localCheckpoint(eager=True)
             )
@@ -141,11 +157,6 @@ def incremental_job(
             agg = resample(slice_df, frame).localCheckpoint(eager=True)
             upsert_bars(agg, agg_root, frame, ingest_id=job_id)
             outputs[frame] = agg
-
-        # one tiny control-plane agg feeds checkpoint advance AND job stats
-        stats = valid.groupBy("symbol", day).agg(
-            F.max("ts_ns").alias("m"), F.count(F.lit(1)).alias("n")
-        ).collect()
     except Exception as e:
         if jobs is not None:
             jobs.fail(job_id, str(e))
@@ -197,7 +208,7 @@ def backfill_gaps(
     from ..lake import read_bars
     from ..operators.gaps import gaps_by_symbol
 
-    lake = read_bars(spark, raw_root, frame="1m")
+    lake = read_bars(spark, raw_root, frame="1m", columns=["symbol"])
     gap_rows = gaps_by_symbol(lake, start, end, weekdays_only).collect()
     by_day: dict[dt.date, list[str]] = {}
     for r in gap_rows:
@@ -216,9 +227,7 @@ def backfill_gaps(
         while job_id in existing_jobs:  # re-run after failure: fresh job row
             job_id = f"backfill-{day.isoformat()}-r{n}"
             n += 1
-        day_start = int(
-            dt.datetime(day.year, day.month, day.day, tzinfo=dt.timezone.utc).timestamp() * 1e9
-        )
+        day_start = _day_start_ns(day)
         incremental_job(
             spark, job_id, fetch_day(syms, day), raw_root, agg_root, checkpoints,
             frames=frames, market_hours=market_hours, jobs=jobs, metrics=metrics,

@@ -6,9 +6,10 @@ from __future__ import annotations
 import datetime as dt
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
-from marketpipe_spark.lake import age_to_cutoff, read_bars, upsert_bars, write_bars
+from marketpipe_spark.lake import BAR_COLUMNS, age_to_cutoff, read_bars, upsert_bars, write_bars
 from marketpipe_spark.loader import load_ohlcv
 from marketpipe_spark.operators.resample import resample
 from marketpipe_spark.plans.views import ensure_views, query, render
@@ -125,3 +126,53 @@ def test_upsert_preserves_columns_and_batch_order(spark, lake_root):
     upsert_bars(dup, root, "1m")
     row = read_bars(spark, root, frame="1m").filter(F.col("ts_ns") == START).collect()
     assert len(row) == 1 and row[0].close == 222.0
+
+
+@pytest.fixture(scope="module")
+def gappy_lake(spark, lake_root):
+    """1m bars on days 0 and 2 only (day 1 has no partition) for AAPL and
+    BRK/B, a symbol whose directory name Spark percent-escapes."""
+    root = f"{lake_root}/gappy"
+    bars = [fake_bars(spark, ["AAPL", "BRK/B"], START + day * DAY_NS, 5) for day in (0, 2)]
+    for b in bars:
+        write_bars(b, root, "1m")
+    return root, sorted((tuple(r) for b in bars for r in b.collect()), key=lambda t: (t[1], t[0]))
+
+
+def test_load_keeps_exactly_the_rows_present(spark, gappy_lake):
+    root, rows = gappy_lake
+    # NOPE has no directory; days -1, 1 and 3 of the range have no partition
+    got = load_ohlcv(spark, root, ["AAPL", "NOPE", "brk/b"], "1m",
+                     start=START - DAY_NS, end=START + 4 * DAY_NS)
+    assert [tuple(r) for r in got.collect()] == rows
+    assert load_ohlcv(spark, root, "AAPL", "1m", start=START + DAY_NS,
+                      end=START + 2 * DAY_NS - 1).count() == 0
+
+
+def test_load_of_absent_symbols_is_empty_and_missing_root_raises(spark, gappy_lake):
+    root, _ = gappy_lake
+    out = load_ohlcv(spark, root, ["NOPE", "ZZZ"], "1m")
+    assert out.columns == list(BAR_COLUMNS) and out.count() == 0
+    with pytest.raises(AnalysisException):
+        load_ohlcv(spark, f"{root}/missing", "AAPL", "1m")
+    with pytest.raises(ValueError, match="vwap"):
+        read_bars(spark, root, frame="1m", columns=["vwap"])
+
+
+def test_point_load_runs_at_most_two_jobs_on_a_40_day_symbol(spark, lake_root):
+    # 40 date partitions under one symbol: over the 32 paths above which
+    # Spark lists a directory with a parallel job
+    root = f"{lake_root}/forty"
+    write_bars(fake_bars(spark, ["AAPL"], START, 40, bar_seconds=86_400), root, "1d")
+    sc = spark.sparkContext
+    group = "test-lake-pipeline-point-load"
+    sc.setJobGroup(group, "point load")
+    try:
+        rows = load_ohlcv(spark, root, "AAPL", "1d", start=START + 20 * DAY_NS,
+                          end=START + 21 * DAY_NS - 1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert [r.ts_ns for r in rows] == [START + 20 * DAY_NS]
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+    # a lone frame=1d directory still reads its partition column as a string
+    assert dict(read_bars(spark, root, frame="1d").dtypes)["frame"] == "string"
