@@ -41,12 +41,6 @@ def daily_label_ns(ts_ns: str | Column) -> Column:
     return (day_ns(ts_ns) + F.lit(DAILY_LABEL_OFFSET_NS)).cast("long")
 
 
-def ts_ns_from_timestamp(ts: str | Column) -> Column:
-    """Instant -> int64 ns.  Timezone-independent (unix_micros is an instant
-    op), so results don't depend on the session zone."""
-    return (F.unix_micros(col_or_expr(ts)) * F.lit(1000)).cast("long")
-
-
 def timestamp_from_ts_ns(ts_ns: str | Column) -> Column:
     """int64 ns -> µs TimestampType (display only; truncates sub-µs)."""
     return F.timestamp_micros((col_or_expr(ts_ns) / F.lit(1000)).cast("long"))
@@ -58,21 +52,9 @@ def trading_date(ts_ns: str | Column) -> Column:
     return F.to_date(timestamp_from_ts_ns(day_ns(ts_ns)))
 
 
-def minute_aligned(ts_ns: str | Column) -> Column:
-    """True when the timestamp sits on a minute boundary
-    (validation rule 5, validation/domain/services.py:84-87)."""
-    return (col_or_expr(ts_ns) % F.lit(NS_PER_MIN)) == 0
-
-
 def typical_price(high: str | Column, low: str | Column, close: str | Column) -> Column:
     """(H+L+C)/3 — VWAP fallback price (domain/services.py:49-56)."""
     return (col_or_expr(high) + col_or_expr(low) + col_or_expr(close)) / F.lit(3.0)
-
-
-def pct_change(open_: str | Column, close: str | Column) -> Column:
-    """(close-open)/open*100 (reference: domain/entities.py:178-204)."""
-    o = col_or_expr(open_)
-    return (col_or_expr(close) - o) / o * F.lit(100.0)
 
 
 def dsum(c: str | Column, scale: int = 4) -> Column:
@@ -84,11 +66,6 @@ def dsum(c: str | Column, scale: int = 4) -> Column:
     oracle, and good hygiene for money columns at any scale.
     """
     return F.sum(col_or_expr(c).cast(f"decimal(38,{scale})"))
-
-
-def dsum_d(c: str | Column, scale: int = 4) -> Column:
-    """:func:`dsum` cast back to double (deterministic decimal->double)."""
-    return dsum(c, scale).cast("double")
 
 
 # ---------------------------------------------------------------------------
@@ -120,16 +97,6 @@ def is_trading_day_ns(ts_ns: str | Column) -> Column:
     """Weekday check on the ns timestamp (services.py:617-631 simplified
     calendar: weekdays only, no holiday table)."""
     return weekday_idx(ts_ns) <= F.lit(4)
-
-
-def session_open_ns(ts_ns: str | Column) -> Column:
-    """ns timestamp of the 09:30 ET regular open on the bar's UTC day."""
-    return day_ns(ts_ns) + F.lit(SESSION_OPEN_NS)
-
-
-def session_close_ns(ts_ns: str | Column) -> Column:
-    """ns timestamp of the 16:00 ET regular close on the bar's UTC day."""
-    return day_ns(ts_ns) + F.lit(SESSION_CLOSE_NS)
 
 
 def is_regular_session_ns(ts_ns: str | Column) -> Column:

@@ -12,10 +12,17 @@ paths and reads only those (``basePath=root`` keeps the partition
 columns), so listing costs O(requested partitions), not O(lake). With
 ``columns`` (names from ``schema.BARS_MIN_SCHEMA``) the scan takes its
 schema from the request and runs no schema-inference job; without it the
-schema is inferred from the selected files, which write and maintenance
-paths need so they never drop a column. Either way the partition columns
-keep fixed types (``frame``/``symbol`` string, ``date`` date): a lone
-``frame=1d`` directory would otherwise be inferred as a double.
+schema is inferred from the selected files. Either way the partition
+columns keep fixed types (``frame``/``symbol`` string, ``date`` date): a
+lone ``frame=1d`` directory would otherwise be inferred as a double.
+
+Writes enforce one schema, as the reference writes its minimal one
+(parquet_engine.py:83-86,220-231): every writer goes through
+``_write_partitioned``, which casts to ``BARS_MIN_SCHEMA`` plus a nullable
+``ingest_id`` and drops any other column. ``upsert_bars`` therefore reads
+the partitions it rewrites under that fixed schema; only
+``compact_partitions``, which repairs files the program may not have
+written, infers.
 
 Write semantics reproduced:
 - K1/K3 partitioned write (zstd; task-commit protocol replaces the
@@ -35,7 +42,6 @@ import functools
 import operator
 import re
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -44,35 +50,6 @@ from pyspark.sql.window import Window as W
 from .functions import NS_PER_DAY, trading_date
 from .schema import BARS_MIN_SCHEMA
 from .session import tune
-
-
-def with_partition_cols(bars: DataFrame, frame: str, ingest_id: str | None = None) -> DataFrame:
-    out = (
-        bars.withColumn("frame", F.lit(frame))
-        .withColumn("date", trading_date("ts_ns"))
-    )
-    if ingest_id is not None:
-        out = out.withColumn("ingest_id", F.lit(ingest_id))
-    return out
-
-
-def write_bars(
-    bars: DataFrame,
-    root: str,
-    frame: str,
-    mode: str = "append",
-    ingest_id: str | None = None,
-) -> None:
-    """K1/K3 — land bars into the partitioned lake."""
-    tune(bars.sparkSession)
-    (
-        with_partition_cols(bars, frame, ingest_id)
-        .repartition("frame", "symbol", "date")  # one writer task per partition
-        .sortWithinPartitions("ts_ns")  # reference sorts within file (engine:162-164)
-        .write.mode(mode)
-        .partitionBy("frame", "symbol", "date")
-        .parquet(root)
-    )
 
 
 #: The canonical bar columns, in ``schema.BARS_MIN_SCHEMA`` order.
@@ -101,6 +78,47 @@ def bars_schema(columns=BAR_COLUMNS) -> T.StructType:
         if f.name in columns and f.name not in _PARTITION_FIELDS
     ]
     return T.StructType(data + list(_PARTITION_FIELDS.values()))
+
+
+#: The lake's write schema: ``BARS_MIN_SCHEMA`` with nullable fields, so that
+#: ``DataFrame.to`` keeps each column's own nullability instead of rejecting
+#: a nullable input column.
+_WRITE_FIELDS = [T.StructField(f.name, f.dataType) for f in BARS_MIN_SCHEMA.fields]
+
+#: The one lake column beside the canonical bars: which job wrote the row.
+_INGEST_ID = T.StructField("ingest_id", T.StringType())
+
+#: What an upsert reads of the partitions it rewrites.
+_UPSERT_READ_SCHEMA = T.StructType(bars_schema().fields + [_INGEST_ID])
+
+
+def _write_partitioned(bars: DataFrame, root: str, frame: str, mode: str) -> None:
+    """The lake's one write: ``bars`` selected and cast to ``BARS_MIN_SCHEMA``
+    (plus ``ingest_id`` when ``bars`` has it), with ``frame`` and ``date``
+    added, one writer task and one ``ts_ns``-sorted file per
+    ``frame/symbol/date`` partition. ``mode="overwrite"`` replaces only the
+    partitions written (dynamic partition overwrite, ``session.tune``)."""
+    tune(bars.sparkSession)
+    fields = _WRITE_FIELDS + ([_INGEST_ID] if "ingest_id" in bars.columns else [])
+    (
+        # One call each, not one Column per field: building a Column costs a
+        # JVM round trip and a call-site capture.
+        bars.to(T.StructType(fields))
+        .withColumns({"frame": F.lit(frame), "date": trading_date("ts_ns")})
+        .repartition("frame", "symbol", "date")  # one writer task per partition
+        .sortWithinPartitions("ts_ns")  # reference sorts within file (engine:162-164)
+        .write.mode(mode)
+        .partitionBy("frame", "symbol", "date")
+        .parquet(root)
+    )
+
+
+def write_bars(bars: DataFrame, root: str, frame: str, ingest_id: str | None = None) -> None:
+    """K1/K3 — append bars to the partitioned lake, under the lake's one
+    write schema (``_write_partitioned``)."""
+    if ingest_id is not None:
+        bars = bars.withColumn("ingest_id", F.lit(ingest_id))
+    _write_partitioned(bars, root, frame, "append")
 
 
 def scan_partitions(
@@ -240,21 +258,40 @@ def _utc_day(ts_ns: int) -> dt.date:
     return dt.date(1970, 1, 1) + dt.timedelta(days=ts_ns // NS_PER_DAY)
 
 
+def _existing_partitions(spark: SparkSession, root: str, frame: str, pairs: list) -> list[str]:
+    """The ``root/frame=F/symbol=S/date=D`` directories of the (symbol, date)
+    ``pairs`` that exist: one glob over the pairs' symbols and day range,
+    cut to the exact pairs. Existence goes through the Hadoop FS API, so an
+    hdfs:// or s3a:// root is seen as it is."""
+    fs, hroot, jvm = _hadoop_fs(spark, root)
+    if not fs.exists(hroot):
+        return []
+    days = [d for _, d in pairs]
+    glob, _ = _partition_glob(root, frame, sorted({s for s, _ in pairs}), min(days), max(days))
+    wanted = {f"symbol={_escape(s)}/date={d.isoformat()}" for s, d in pairs}
+    found = (st.getPath().toString() for st in fs.globStatus(jvm.org.apache.hadoop.fs.Path(glob)) or [])
+    return [p for p in found if "/".join(p.rsplit("/", 2)[-2:]) in wanted]
+
+
 def upsert_bars(new_bars: DataFrame, root: str, frame: str, ingest_id: str | None = None) -> None:
     """K2/P7 — append with keep-last dedup on (symbol, ts_ns).
 
     The reference reads the partition file, concats, drops duplicate ts
     keeping the last, and rewrites (parquet_engine.py:127-182). Spark
-    version: union the affected partitions with the new batch, keep the
-    newest row per key, and dynamically overwrite ONLY those partitions.
+    version: collect the (symbol, date) partitions the batch touches, read
+    those ``frame=F/symbol=S/date=D`` directories that exist under a fixed
+    schema (the canonical columns plus a nullable ``ingest_id``, so no
+    schema-inference job runs and a file without ``ingest_id`` reads it as
+    null), keep the newest row per key, and dynamically overwrite ONLY those
+    partitions. A partition or root that does not exist yet simply has no
+    existing rows. Incoming rows carry ``ingest_id`` (null when none is
+    given); rewritten rows keep theirs. An empty batch writes nothing.
     """
-    spark = new_bars.sparkSession
-    tune(spark)
+    spark = tune(new_bars.sparkSession)
+    touched = new_bars.select("symbol", trading_date("ts_ns").alias("date")).distinct().collect()
     # Empty batch: a semantic no-op — and writing it would NOT be one. An
-    # empty partitionBy write materializes a root containing only _SUCCESS,
-    # and a schema-less root poisons every later scan/upsert with
-    # UNABLE_TO_INFER_SCHEMA (the boundary-e2e empty-increment scenario).
-    if not new_bars.head(1):
+    # empty partitionBy write materializes a root containing only _SUCCESS.
+    if not touched:
         return
     # _gen separates existing (0) from incoming (1); _ord is the within-batch
     # tie-breaker so duplicate (symbol, ts_ns) keys in ONE batch resolve like
@@ -262,87 +299,29 @@ def upsert_bars(new_bars: DataFrame, root: str, frame: str, ingest_id: str | Non
     # the later row in batch order wins. (Fully deterministic when the batch
     # plan is — a shuffled batch with intra-batch duplicate keys should be
     # pre-deduped with keep_last by the caller.)
-    staged = (
-        with_partition_cols(new_bars, frame, ingest_id)
-        .withColumn("_gen", F.lit(1))
-        .withColumn("_ord", F.monotonically_increasing_id())
+    merged = new_bars.select(
+        *BAR_COLUMNS,
+        F.lit(ingest_id).cast("string").alias("ingest_id"),
+        F.lit(1).alias("_gen"),
+        F.monotonically_increasing_id().alias("_ord"),
     )
+    paths = _existing_partitions(spark, root, frame, touched)
+    if paths:
+        # A file the lake's writer did not write may lack ts_ns and read it as
+        # null; rewriting would move its rows out of the partition, so the
+        # write fails instead and leaves the partition as it was.
+        no_ts = F.raise_error(F.lit(f"upsert_bars: a file under {root}/frame={frame} has no ts_ns"))
+        existing = scan_partitions(spark, root, paths, _UPSERT_READ_SCHEMA).select(
+            F.coalesce("ts_ns", no_ts).alias("ts_ns"),
+            *(c for c in BAR_COLUMNS if c != "ts_ns"),
+            "ingest_id",
+            F.lit(0).alias("_gen"),
+            F.lit(0).cast("long").alias("_ord"),
+        )
+        merged = existing.unionByName(merged)
     keep_last = W.partitionBy("symbol", "ts_ns").orderBy(F.desc("_gen"), F.desc("_ord"))
-
-    # Existence via the Hadoop FS API, not os.path — an hdfs://- or s3a://-
-    # scheme root is invisible to the local filesystem, and taking the
-    # append branch there would skip keep-last dedup on every call.
-    fs, hroot, _ = _hadoop_fs(spark, root)
-
-    def _first_write() -> None:
-        # Same keep-last discipline as the merge path: intra-batch duplicate
-        # (symbol, ts_ns) keys must resolve identically whether or not the
-        # lake already existed.
-        first = (
-            staged.withColumn("_rn", F.row_number().over(keep_last))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "_gen", "_ord")
-        )
-        (
-            first.repartition("frame", "symbol", "date")
-            .sortWithinPartitions("ts_ns")
-            .write.mode("append")
-            .partitionBy("frame", "symbol", "date")
-            .parquet(root)
-        )
-
-    if not fs.exists(hroot):  # first write into an empty lake
-        _first_write()
-        return
-    try:
-        existing = spark.read.parquet(root).filter(F.col("frame") == frame)
-    except AnalysisException as e:
-        # The root EXISTS but holds no readable data (a pre-created empty
-        # directory, or _SUCCESS debris from an interrupted job): that is a
-        # first write, not a merge — found by the upsert property sweep.
-        # Match by error CLASS (stable API since Spark 3.4), with the
-        # message substring as fallback for builds predating error classes.
-        try:
-            klass = e.getErrorClass()
-        except Exception:
-            klass = None
-        if klass == "UNABLE_TO_INFER_SCHEMA" or "UNABLE_TO_INFER_SCHEMA" in str(e):
-            _first_write()
-            return
-        raise
-
-    # Prune to the partitions the batch touches (broadcast semi-join on the
-    # partition keys — tiny), so a one-day upsert reads one day.
-    touched = staged.select("symbol", "date").distinct()
-    existing = existing.join(F.broadcast(touched), ["symbol", "date"], "left_semi")
-    # Symmetric schema union: a column present on either side survives with
-    # nulls on the other — an upsert without ingest_id must not erase
-    # previously written ingest_ids from rewritten partitions.
-    for c in staged.columns:
-        if c not in existing.columns:
-            existing = existing.withColumn(c, F.lit(None).cast(staged.schema[c].dataType))
-    for c in existing.columns:
-        if c not in staged.columns:
-            staged = staged.withColumn(c, F.lit(None).cast(existing.schema[c].dataType))
-    existing = (
-        existing.withColumn("_gen", F.lit(0))
-        .withColumn("_ord", F.lit(0).cast("long"))
-        .select(*staged.columns)
-    )
-
-    merged = (
-        existing.unionByName(staged)
-        .withColumn("_rn", F.row_number().over(keep_last))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_gen", "_ord")
-    )
-    (
-        merged.repartition("frame", "symbol", "date")
-        .sortWithinPartitions("ts_ns")
-        .write.mode("overwrite")  # dynamic: only touched partitions rewritten
-        .partitionBy("frame", "symbol", "date")
-        .parquet(root)
-    )
+    merged = merged.withColumn("_rn", F.row_number().over(keep_last)).filter(F.col("_rn") == 1)
+    _write_partitioned(merged, root, frame, "overwrite")
 
 
 AGE_RE = re.compile(r"^(\d+)([dmy]?)$")
@@ -422,16 +401,11 @@ def compact_partitions(
     doomed = sorted(d for d, n in counts.items() if n > max_files)
     if not doomed:
         return []
-    # Inferred schema, so no written column is dropped; pinned before the
-    # write overwrites its own input.
+    # Inferred schema: these may be files the program did not write, which
+    # the write casts back to the lake's schema. Pinned before the write
+    # overwrites its own input.
     slice_df = scan_partitions(spark, root, doomed).localCheckpoint(eager=True)
-    (
-        slice_df.repartition("frame", "symbol", "date")
-        .sortWithinPartitions("ts_ns")
-        .write.mode("overwrite")
-        .partitionBy("frame", "symbol", "date")
-        .parquet(root)
-    )
+    _write_partitioned(slice_df, root, frame, "overwrite")
     return doomed
 
 

@@ -383,29 +383,6 @@ def kcore_peel(
     return out
 
 
-def kcore_oracle_sql(edges_sql: str, rounds: int = 6) -> str:
-    """CTE list reproducing :func:`kcore_peel` with ``k=None`` (average-
-    degree threshold) and one unrolled CTE per round; exposes the final
-    survivors as ``a{rounds}(id, deg)``."""
-    parts = [
-        f"ke AS (SELECT LEAST(u, v) AS u, GREATEST(u, v) AS v FROM ({edges_sql}) GROUP BY 1, 2)",
-        "ks AS (SELECT u, v FROM ke UNION ALL SELECT v AS u, u AS v FROM ke)",
-        "a0 AS (SELECT DISTINCT u AS id FROM ks)",
-        "kv AS (SELECT ((SELECT COUNT(*) FROM ks) + (SELECT COUNT(*) FROM a0) - 1)"
-        " // (SELECT COUNT(*) FROM a0) AS k)",
-    ]
-    for i in range(1, rounds + 1):
-        parts.append(
-            f"""a{i} AS (
-  SELECT ks.u AS id, CAST(COUNT(*) AS BIGINT) AS deg
-  FROM ks
-  WHERE ks.u IN (SELECT id FROM a{i - 1}) AND ks.v IN (SELECT id FROM a{i - 1})
-  GROUP BY ks.u HAVING COUNT(*) >= (SELECT k FROM kv)
-)"""
-        )
-    return ",\n".join(parts)
-
-
 def kcore_layers(
     edges: DataFrame, k: int | None = None, rounds: int = 6
 ) -> DataFrame:
@@ -1583,50 +1560,54 @@ def pagerank_weighted(
     )
     ws = e.groupBy("src").agg(F.sum("w").cast("long").alias("wsum"))
     pins: list = []
-    ed = _pin_keyed(e.join(ws, "src"), "src", scope=pins)
-    # The weight-contract probe runs against the PINNED ed, not against
-    # `e`: the inner join on src preserves every aggregated edge row (ws
-    # is keyed by e's own src values), so the w column is the same row
-    # set — but the probe now scans materialized blocks instead of paying
-    # a dedicated corpus-scale aggregation job before any pin exists.
-    if ed.where(F.col("w").isNull() | (F.col("w") <= 0)).limit(1).count() > 0:
-        raise ValueError(
-            "pagerank_weighted: edge weights must be positive and non-NULL "
-            "(a NULL/<=0 weight would propagate NULL scores)"
-        )
-    # Node ids from the PINNED ed (identical id set; see pagerank).
-    nodes = _pin_keyed(
-        ed.select(F.col("src").alias("id"))
-        .unionByName(ed.select(F.col("dst").alias("id")))
-        .distinct(),
-        "id",
-        scope=pins,
-    )
-    n = nodes.count()
-    if n == 0:
-        raise ValueError("pagerank_weighted: empty edge list (no nodes)")
-    s0 = scale // n
-    base = (PPM - damping_ppm) * s0 // PPM
-
-    scores = nodes.withColumn("score", F.lit(s0).cast("long"))
-    for _ in range(iterations):
-        arrived = (
-            ed.join(_state(scores, n), ed.src == scores.id)
-            .select("dst", F.expr("score * w DIV wsum").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("acc"))
-        )
-        scores = _pin_state(
-            nodes.join(_state(arrived, n), nodes.id == arrived.dst, "left_outer")
-            .select(
-                "id",
-                (
-                    F.lit(base)
-                    + F.expr(f"coalesce(acc, 0L) * {damping_ppm} DIV {PPM}")
-                ).cast("long").alias("score"),
+    # Released on every exit: the weight probe and the empty-graph guard
+    # raise after pins exist.
+    try:
+        ed = _pin_keyed(e.join(ws, "src"), "src", scope=pins)
+        # The weight-contract probe runs against the PINNED ed, not against
+        # `e`: the inner join on src preserves every aggregated edge row (ws
+        # is keyed by e's own src values), so the w column is the same row
+        # set — but the probe now scans materialized blocks instead of paying
+        # a dedicated corpus-scale aggregation job before any pin exists.
+        if ed.where(F.col("w").isNull() | (F.col("w") <= 0)).limit(1).count() > 0:
+            raise ValueError(
+                "pagerank_weighted: edge weights must be positive and non-NULL "
+                "(a NULL/<=0 weight would propagate NULL scores)"
             )
+        # Node ids from the PINNED ed (identical id set; see pagerank).
+        nodes = _pin_keyed(
+            ed.select(F.col("src").alias("id"))
+            .unionByName(ed.select(F.col("dst").alias("id")))
+            .distinct(),
+            "id",
+            scope=pins,
         )
-    _release(pins)
+        n = nodes.count()
+        if n == 0:
+            raise ValueError("pagerank_weighted: empty edge list (no nodes)")
+        s0 = scale // n
+        base = (PPM - damping_ppm) * s0 // PPM
+
+        scores = nodes.withColumn("score", F.lit(s0).cast("long"))
+        for _ in range(iterations):
+            arrived = (
+                ed.join(_state(scores, n), ed.src == scores.id)
+                .select("dst", F.expr("score * w DIV wsum").alias("c"))
+                .groupBy("dst")
+                .agg(F.sum("c").alias("acc"))
+            )
+            scores = _pin_state(
+                nodes.join(_state(arrived, n), nodes.id == arrived.dst, "left_outer")
+                .select(
+                    "id",
+                    (
+                        F.lit(base)
+                        + F.expr(f"coalesce(acc, 0L) * {damping_ppm} DIV {PPM}")
+                    ).cast("long").alias("score"),
+                )
+            )
+    finally:
+        _release(pins)
     return scores
 
 

@@ -99,9 +99,9 @@ def refresh_resample(
     aggregate after a new batch lands, recomputing ONLY touched buckets.
 
     OHLC first/last/min/max are not subtractable, so the refresh re-reads the
-    base rows of each touched (symbol, bucket) group — the same
-    touched-partition pruning the upsert path uses (lake.upsert_bars) — and
-    keeps every untouched aggregate row as-is:
+    base rows of each touched (symbol, bucket) group — as the upsert path
+    (lake.upsert_bars) reads only its touched partitions — and keeps every
+    untouched aggregate row as-is:
 
     - ``touched`` = distinct (symbol, bucket) of the batch — tiny, broadcast.
     - untouched rows: broadcast ANTI join on ``agg_old`` (no shuffle).

@@ -56,17 +56,6 @@ def _dot(x: Column, y: Column) -> Column:
     return F.aggregate(F.zip_with(x, y, lambda p, q: p * q), F.lit(0.0), lambda acc, z: acc + z)
 
 
-def with_norm(df: DataFrame, id_col: str, vec_col: str, prefix: str) -> DataFrame:
-    """(id, vec, norm) with the L2 norm computed ONCE per vector — pairwise
-    scoring then does one dot per pair instead of three."""
-    v = F.col(vec_col).cast("array<double>")
-    return df.select(
-        F.col(id_col).alias(f"{prefix}_id"),
-        v.alias(f"{prefix}v"),
-        F.sqrt(_dot(v, v)).alias(f"{prefix}n"),
-    )
-
-
 def cosine(x: Column, y: Column) -> Column:
     return _dot(x, y) / F.sqrt(_dot(x, x) * _dot(y, y))
 

@@ -8,8 +8,6 @@ fails any entry whose shuffle/sort count grows vs the baseline).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-
 
 def plan_shape(plan_text: str) -> dict[str, int]:
     """Count plan operators from an executedPlan tree string. Line-based so
@@ -39,8 +37,3 @@ def plan_shape(plan_text: str) -> dict[str, int]:
         if "ShuffledHashJoin" in line:
             shape["shuffled_hash_joins"] += 1
     return shape
-
-
-def df_shape(df: DataFrame) -> dict[str, int]:
-    """Shape of a DataFrame's physical plan (planning only, no execution)."""
-    return plan_shape(df._jdf.queryExecution().executedPlan().toString())

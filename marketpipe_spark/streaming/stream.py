@@ -196,8 +196,7 @@ def stream_to_lake(
     from ..lake import upsert_bars
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+        # An empty micro-batch is a no-op inside upsert_bars.
         upsert_bars(batch_df, root, frame, ingest_id=f"stream-{batch_id}")
 
     writer = bar_stream.writeStream.foreachBatch(_sink).option(

@@ -711,13 +711,23 @@ def test_pagerank_weighted_uniform_equals_plain(spark):
     assert wtd2[3] > wtd[3] and wtd2[2] < wtd[2]
 
 
-def test_pagerank_weighted_guards(spark):
+def test_pagerank_weighted_guards(spark, monkeypatch):
     """r8 ADVICE: empty edge list and NULL/non-positive weights fail loudly
-    instead of ZeroDivisionError / silent NULL propagation."""
+    instead of ZeroDivisionError / silent NULL propagation, and the pins
+    taken before the guard raised are released."""
     import pytest
 
     from marketpipe_spark.operators.graph import pagerank_weighted
 
+    def disk_only_rdds():
+        return {
+            rid
+            for rid, rdd in spark.sparkContext._jsc.getPersistentRDDs().items()
+            if rdd.getStorageLevel().useDisk() and not rdd.getStorageLevel().useMemory()
+        }
+
+    pre_existing = disk_only_rdds()
+    monkeypatch.setenv("MP_PIN_MODE", "persist")
     empty = spark.createDataFrame([], "src long, dst long, w long")
     with pytest.raises(ValueError, match="empty edge list"):
         pagerank_weighted(empty, iterations=1)
@@ -727,6 +737,8 @@ def test_pagerank_weighted_guards(spark):
     null_w = spark.createDataFrame([(1, 2, None)], "src long, dst long, w long")
     with pytest.raises(ValueError, match="positive"):
         pagerank_weighted(null_w, iterations=1)
+    leaked = disk_only_rdds() - pre_existing
+    assert not leaked, f"DISK_ONLY pins leaked by the raising calls: {leaked}"
 
 
 def test_hits_renorm_bound_enforced(spark):

@@ -4,6 +4,7 @@ fake bars → partitioned lake → resample → agg lake → views → SQL → l
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
 from pyspark.errors import AnalysisException
@@ -163,7 +164,10 @@ def test_point_load_runs_at_most_two_jobs_on_a_40_day_symbol(spark, lake_root):
     # 40 date partitions under one symbol: over the 32 paths above which
     # Spark lists a directory with a parallel job
     root = f"{lake_root}/forty"
-    write_bars(fake_bars(spark, ["AAPL"], START, 40, bar_seconds=86_400), root, "1d")
+    # one more input column and an int volume: the write keeps the lake schema
+    bars = fake_bars(spark, ["AAPL"], START, 40, bar_seconds=86_400)
+    write_bars(bars.withColumn("vwap", F.col("close")).withColumn("volume", F.col("volume").cast("int")),
+               root, "1d")
     sc = spark.sparkContext
     group = "test-lake-pipeline-point-load"
     sc.setJobGroup(group, "point load")
@@ -175,4 +179,38 @@ def test_point_load_runs_at_most_two_jobs_on_a_40_day_symbol(spark, lake_root):
     assert [r.ts_ns for r in rows] == [START + 20 * DAY_NS]
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
     # a lone frame=1d directory still reads its partition column as a string
-    assert dict(read_bars(spark, root, frame="1d").dtypes)["frame"] == "string"
+    dtypes = dict(read_bars(spark, root, frame="1d").dtypes)
+    assert dtypes["frame"] == "string"
+    assert "vwap" not in dtypes and dtypes["volume"] == "bigint"
+
+
+def test_upsert_of_one_day_reads_only_its_partition(spark, lake_root):
+    # a 1m lake of 40 date partitions; upsert one bar into one of them
+    root = f"{lake_root}/upsert_forty"
+    write_bars(fake_bars(spark, ["AAPL"], START, 40, bar_seconds=86_400), root, "1m")
+    day20 = START + 20 * DAY_NS
+    patch = spark.createDataFrame(
+        [("AAPL", day20, 1.0, 1.0, 1.0, 7.0, 1)],
+        "symbol string, ts_ns long, open double, high double, low double, close double, volume long",
+    )
+    sc = spark.sparkContext
+    group = "test-lake-pipeline-upsert-one-day"
+    sc.setJobGroup(group, "upsert one day")
+    try:
+        upsert_bars(patch, root, "1m", ingest_id="patch")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 5
+    out = read_bars(spark, root, frame="1m", columns=["ts_ns", "close"])
+    assert out.count() == 40
+    assert out.filter(F.col("ts_ns") == day20).collect()[0].close == 7.0
+
+    # a file without ts_ns in the touched partition fails the upsert, which
+    # leaves the partition as it was
+    day30 = START + 30 * DAY_NS
+    part = f"{root}/frame=1m/symbol=AAPL/date={dt.date(2024, 1, 31)}"
+    spark.range(2).selectExpr("id AS wrong_col").write.mode("append").parquet(part)
+    before = sorted(os.listdir(part))
+    with pytest.raises(Exception, match="has no ts_ns"):
+        upsert_bars(patch.withColumn("ts_ns", F.lit(day30)), root, "1m")
+    assert sorted(os.listdir(part)) == before
