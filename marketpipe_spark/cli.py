@@ -140,17 +140,17 @@ def cmd_backfill(args) -> int:
 
 
 def cmd_aggregate(args) -> int:
-    from .lake import read_bars, upsert_bars
-    from .operators.resample import resample
+    from .lake import BAR_COLUMNS, read_bars, upsert_bars
+    from .operators.resample import resample_all
 
     spark = _spark("aggregate")
-    raw = read_bars(spark, args.root, frame="1m").select(
-        "symbol", "ts_ns", "open", "high", "low", "close", "volume"
-    )
-    for frame in args.frames.split(","):
-        agg = resample(raw, frame)
-        upsert_bars(agg, args.agg_root, frame)
-        print(f"aggregated frame {frame}: {agg.count()} bars")
+    raw = read_bars(spark, args.root, frame="1m", columns=BAR_COLUMNS).select(*BAR_COLUMNS)
+    frames = args.frames.split(",")
+    aggs = resample_all(raw, frames)
+    upsert_bars(aggs, args.agg_root)
+    counts = dict(aggs.groupBy("frame").count().collect())
+    for frame in frames:
+        print(f"aggregated frame {frame}: {counts.get(frame, 0)} bars")
     return 0
 
 

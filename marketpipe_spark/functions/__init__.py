@@ -57,17 +57,6 @@ def typical_price(high: str | Column, low: str | Column, close: str | Column) ->
     return (col_or_expr(high) + col_or_expr(low) + col_or_expr(close)) / F.lit(3.0)
 
 
-def dsum(c: str | Column, scale: int = 4) -> Column:
-    """Order-deterministic SUM of a double column.
-
-    Doubles summed across shuffle partitions are non-associative; casting each
-    addend to Decimal(38, scale) makes the sum exact and therefore independent
-    of partitioning — required for bit-stable parity with a single-threaded
-    oracle, and good hygiene for money columns at any scale.
-    """
-    return F.sum(col_or_expr(c).cast(f"decimal(38,{scale})"))
-
-
 # ---------------------------------------------------------------------------
 # Trading calendar (reference TradingCalendarService,
 # domain/services.py:610-689: weekday-only trading days; fixed UTC-5 ET
@@ -76,10 +65,8 @@ def dsum(c: str | Column, scale: int = 4) -> Column:
 # modular arithmetic off 1970-01-01 = Thursday) so any SQL engine reproduces
 # them bit-exactly — no session-zone-dependent functions.
 
-SESSION_PRE_OPEN_NS = 32_400 * NS_PER_SEC  # 04:00 ET = 09:00 UTC
 SESSION_OPEN_NS = 52_200 * NS_PER_SEC  # 09:30 ET = 14:30 UTC
 SESSION_CLOSE_NS = 75_600 * NS_PER_SEC  # 16:00 ET = 21:00 UTC
-SESSION_POST_CLOSE_NS = 90_000 * NS_PER_SEC  # 20:00 ET = 01:00 UTC next day
 
 
 def weekday_idx(ts_ns: str | Column) -> Column:

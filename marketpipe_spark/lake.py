@@ -27,7 +27,7 @@ written, infers.
 Write semantics reproduced:
 - K1/K3 partitioned write (zstd; task-commit protocol replaces the
   reference's inter-process file locks, parquet_engine.py:97-99)
-- K2 upsert-append with keep-last dedup on (symbol, ts_ns)
+- K2 upsert-append with keep-last dedup on (frame, symbol, ts_ns)
   (parquet_engine.py:127-182) via dynamic partition overwrite
 - K7 retention pruning by partition date (cli/prune.py:17-36)
 
@@ -92,21 +92,27 @@ _INGEST_ID = T.StructField("ingest_id", T.StringType())
 _UPSERT_READ_SCHEMA = T.StructType(bars_schema().fields + [_INGEST_ID])
 
 
-def _write_partitioned(bars: DataFrame, root: str, frame: str, mode: str) -> None:
+def _write_partitioned(bars: DataFrame, root: str, frame: str | None, mode: str) -> None:
     """The lake's one write: ``bars`` selected and cast to ``BARS_MIN_SCHEMA``
-    (plus ``ingest_id`` when ``bars`` has it), with ``frame`` and ``date``
-    added, one writer task and one ``ts_ns``-sorted file per
+    (plus ``ingest_id`` when ``bars`` has it), with ``date`` added and
+    ``frame`` set to ``frame``, or kept from ``bars``'s ``frame`` column when
+    that is None. One writer task and one ``ts_ns``-sorted file per
     ``frame/symbol/date`` partition. ``mode="overwrite"`` replaces only the
     partitions written (dynamic partition overwrite, ``session.tune``)."""
     tune(bars.sparkSession)
-    fields = _WRITE_FIELDS + ([_INGEST_ID] if "ingest_id" in bars.columns else [])
+    kept = [f for f in (_INGEST_ID, _PARTITION_FIELDS["frame"]) if f.name in bars.columns]
+    added = {"date": trading_date("ts_ns")} | ({"frame": F.lit(frame)} if frame else {})
+    # The planned write re-sorts each task by the partition columns unless its
+    # input already is, which loses ts_ns order. Spark folds a literal frame
+    # out of any sort key, so the key names frame only when it is data.
+    order = ("symbol", "date", "ts_ns") if frame else ("frame", "symbol", "date", "ts_ns")
     (
         # One call each, not one Column per field: building a Column costs a
         # JVM round trip and a call-site capture.
-        bars.to(T.StructType(fields))
-        .withColumns({"frame": F.lit(frame), "date": trading_date("ts_ns")})
+        bars.to(T.StructType(_WRITE_FIELDS + kept))
+        .withColumns(added)
         .repartition("frame", "symbol", "date")  # one writer task per partition
-        .sortWithinPartitions("ts_ns")  # reference sorts within file (engine:162-164)
+        .sortWithinPartitions(*order)  # reference sorts within file (engine:162-164)
         .write.mode(mode)
         .partitionBy("frame", "symbol", "date")
         .parquet(root)
@@ -143,17 +149,20 @@ _GLOB_MAX_DAYS = 366
 
 def _partition_glob(
     root: str,
-    frame: str,
+    frames: list[str],
     symbols: list[str] | None,
     first_day: dt.date | None,
     last_day: dt.date | None,
 ) -> tuple[str | None, bool]:
     """Hadoop glob of the partition directories a request reads:
-    ``root/frame=F/symbol={S1,S2}/date={D1,D2,...}``, and whether it names
-    the requested symbols and days exactly. None when the range is empty."""
+    ``root/frame=F/symbol={S1,S2}/date={D1,D2,...}`` (``frame={F1,F2}`` for
+    several frames), and whether it names the requested symbols and days
+    exactly. None when the range is empty."""
     if first_day and last_day and first_day > last_day:
         return None, True
-    glob = f"{_glob_escape(root)}/frame={_glob_escape(_escape(frame))}"
+    names = [_escape(f) for f in frames]
+    frame_glob = _alternatives(names) if len(names) > 1 else _glob_escape(names[0])
+    glob = f"{_glob_escape(root)}/frame={frame_glob}"
     symbol_glob = "/symbol=" + (_alternatives(_escape(s) for s in symbols) if symbols else "*")
     if first_day is None and last_day is None:
         return (glob + symbol_glob if symbols else glob), True
@@ -223,7 +232,7 @@ def read_bars(
     if frame is None or not fs.exists(hroot):
         paths, exact = [root], False  # a missing root raises here, as it always has
     else:
-        glob, exact = _partition_glob(root, frame, symbols, first_day, last_day)
+        glob, exact = _partition_glob(root, [frame], symbols, first_day, last_day)
         found = glob and fs.globStatus(jvm.org.apache.hadoop.fs.Path(glob))
         paths = [glob] if found else []
     if paths:
@@ -258,68 +267,73 @@ def _utc_day(ts_ns: int) -> dt.date:
     return dt.date(1970, 1, 1) + dt.timedelta(days=ts_ns // NS_PER_DAY)
 
 
-def _existing_partitions(spark: SparkSession, root: str, frame: str, pairs: list) -> list[str]:
-    """The ``root/frame=F/symbol=S/date=D`` directories of the (symbol, date)
-    ``pairs`` that exist: one glob over the pairs' symbols and day range,
-    cut to the exact pairs. Existence goes through the Hadoop FS API, so an
-    hdfs:// or s3a:// root is seen as it is."""
+def _existing_partitions(spark: SparkSession, root: str, triples: list) -> list[str]:
+    """The ``root/frame=F/symbol=S/date=D`` directories of the (frame,
+    symbol, date) ``triples`` that exist: one glob over the triples' frames,
+    symbols and day range, cut to the exact triples. Existence goes through
+    the Hadoop FS API, so an hdfs:// or s3a:// root is seen as it is."""
     fs, hroot, jvm = _hadoop_fs(spark, root)
     if not fs.exists(hroot):
         return []
-    days = [d for _, d in pairs]
-    glob, _ = _partition_glob(root, frame, sorted({s for s, _ in pairs}), min(days), max(days))
-    wanted = {f"symbol={_escape(s)}/date={d.isoformat()}" for s, d in pairs}
+    frames, symbols, days = (sorted(set(col)) for col in zip(*triples))
+    glob, _ = _partition_glob(root, frames, symbols, days[0], days[-1])
+    wanted = {f"frame={_escape(f)}/symbol={_escape(s)}/date={d.isoformat()}" for f, s, d in triples}
     found = (st.getPath().toString() for st in fs.globStatus(jvm.org.apache.hadoop.fs.Path(glob)) or [])
-    return [p for p in found if "/".join(p.rsplit("/", 2)[-2:]) in wanted]
+    return [p for p in found if "/".join(p.rsplit("/", 3)[-3:]) in wanted]
 
 
-def upsert_bars(new_bars: DataFrame, root: str, frame: str, ingest_id: str | None = None) -> None:
-    """K2/P7 — append with keep-last dedup on (symbol, ts_ns).
+def upsert_bars(new_bars: DataFrame, root: str, frame: str | None = None, ingest_id: str | None = None) -> None:
+    """K2/P7 — append with keep-last dedup on (frame, symbol, ts_ns). A given
+    ``frame`` fills the batch's ``frame`` column; without it the batch brings
+    its own, so one call lands several frames (whose keys share timestamps:
+    the 5m bucket and the 1d bar at 13:30 are two bars).
 
     The reference reads the partition file, concats, drops duplicate ts
     keeping the last, and rewrites (parquet_engine.py:127-182). Spark
-    version: collect the (symbol, date) partitions the batch touches, read
-    those ``frame=F/symbol=S/date=D`` directories that exist under a fixed
-    schema (the canonical columns plus a nullable ``ingest_id``, so no
-    schema-inference job runs and a file without ``ingest_id`` reads it as
-    null), keep the newest row per key, and dynamically overwrite ONLY those
-    partitions. A partition or root that does not exist yet simply has no
-    existing rows. Incoming rows carry ``ingest_id`` (null when none is
-    given); rewritten rows keep theirs. An empty batch writes nothing.
+    version: collect the (frame, symbol, date) partitions the batch touches,
+    read those directories that exist under a fixed schema (the canonical
+    columns plus a nullable ``ingest_id``, so no schema-inference job runs
+    and a file without ``ingest_id`` reads it as null), keep the newest row
+    per key, and dynamically overwrite ONLY those partitions. A partition or
+    root that does not exist yet simply has no existing rows. Incoming rows
+    carry ``ingest_id`` (null when none is given); rewritten rows keep
+    theirs. An empty batch writes nothing.
     """
     spark = tune(new_bars.sparkSession)
-    touched = new_bars.select("symbol", trading_date("ts_ns").alias("date")).distinct().collect()
+    if frame is not None:
+        new_bars = new_bars.withColumn("frame", F.lit(frame))
+    touched = new_bars.select("frame", "symbol", trading_date("ts_ns")).distinct().collect()
     # Empty batch: a semantic no-op — and writing it would NOT be one. An
     # empty partitionBy write materializes a root containing only _SUCCESS.
     if not touched:
         return
     # _gen separates existing (0) from incoming (1); _ord is the within-batch
-    # tie-breaker so duplicate (symbol, ts_ns) keys in ONE batch resolve like
-    # the reference's drop_duplicates keep='last' (parquet_engine.py:162-164):
+    # tie-breaker so duplicate keys in ONE batch resolve like the
+    # reference's drop_duplicates keep='last' (parquet_engine.py:162-164):
     # the later row in batch order wins. (Fully deterministic when the batch
     # plan is — a shuffled batch with intra-batch duplicate keys should be
     # pre-deduped with keep_last by the caller.)
     merged = new_bars.select(
-        *BAR_COLUMNS,
+        "frame", *BAR_COLUMNS,
         F.lit(ingest_id).cast("string").alias("ingest_id"),
         F.lit(1).alias("_gen"),
         F.monotonically_increasing_id().alias("_ord"),
     )
-    paths = _existing_partitions(spark, root, frame, touched)
+    paths = _existing_partitions(spark, root, touched)
     if paths:
         # A file the lake's writer did not write may lack ts_ns and read it as
         # null; rewriting would move its rows out of the partition, so the
         # write fails instead and leaves the partition as it was.
-        no_ts = F.raise_error(F.lit(f"upsert_bars: a file under {root}/frame={frame} has no ts_ns"))
+        no_ts = F.raise_error(F.lit(f"upsert_bars: a file under {root} has no ts_ns"))
         existing = scan_partitions(spark, root, paths, _UPSERT_READ_SCHEMA).select(
-            F.coalesce("ts_ns", no_ts).alias("ts_ns"),
+            "frame", F.coalesce("ts_ns", no_ts).alias("ts_ns"),
             *(c for c in BAR_COLUMNS if c != "ts_ns"),
             "ingest_id",
             F.lit(0).alias("_gen"),
             F.lit(0).cast("long").alias("_ord"),
         )
         merged = existing.unionByName(merged)
-    keep_last = W.partitionBy("symbol", "ts_ns").orderBy(F.desc("_gen"), F.desc("_ord"))
+    keep_last = W.partitionBy("frame", "symbol", "ts_ns").orderBy(F.desc("_gen"), F.desc("_ord"))
     merged = merged.withColumn("_rn", F.row_number().over(keep_last)).filter(F.col("_rn") == 1)
     _write_partitioned(merged, root, frame, "overwrite")
 

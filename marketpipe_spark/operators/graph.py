@@ -88,47 +88,49 @@ def pagerank(
     # exchange on this (big) side disappears — the cluster upgrade path;
     # scripts/graph_plan_probe.py records the exchange counts per mode.
     pins: list = []
-    ed = _pin_keyed(e.join(deg, "src"), "src", scope=pins)
-    # Derive the node set from the PINNED edge frame, not from `e`: ed
-    # carries every edge row, so the id sets are identical — but reading
-    # the pinned blocks makes this pin a cheap distinct instead of a
-    # second full evaluation of the corpus-scale edge distinct (two
-    # separate pin jobs cannot share exchanges, so the old form ran the
-    # edge dedup twice; guide §2.4). Same r11 change across the loop
-    # family (ppr/hits/weighted/hyperball/walks).
-    nodes = _pin_keyed(
-        ed.select(F.col("src").alias("id"))
-        .unionByName(ed.select(F.col("dst").alias("id")))
-        .distinct(),
-        "id",
-        scope=pins,
-    )
-    n = nodes.count()
-    if n == 0:
-        raise ValueError("pagerank: empty edge list (no nodes)")
-    s0 = scale // n
-    base = (PPM - damping_ppm) * s0 // PPM
+    try:
+        ed = _pin_keyed(e.join(deg, "src"), "src", scope=pins)
+        # Derive the node set from the PINNED edge frame, not from `e`: ed
+        # carries every edge row, so the id sets are identical — but reading
+        # the pinned blocks makes this pin a cheap distinct instead of a
+        # second full evaluation of the corpus-scale edge distinct (two
+        # separate pin jobs cannot share exchanges, so the old form ran the
+        # edge dedup twice; guide §2.4). Same r11 change across the loop
+        # family (ppr/hits/weighted/hyperball/walks).
+        nodes = _pin_keyed(
+            ed.select(F.col("src").alias("id"))
+            .unionByName(ed.select(F.col("dst").alias("id")))
+            .distinct(),
+            "id",
+            scope=pins,
+        )
+        n = nodes.count()
+        if n == 0:
+            raise ValueError("pagerank: empty edge list (no nodes)")
+        s0 = scale // n
+        base = (PPM - damping_ppm) * s0 // PPM
 
-    scores = nodes.withColumn("score", F.lit(s0).cast("long"))
-    for _ in range(iterations):
-        arrived = (
-            ed.join(_state(scores, n), ed.src == scores.id)
-            .select("dst", F.expr("score DIV deg").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("acc"))
-        )
-        scores = (
-            nodes.join(_state(arrived, n), nodes.id == arrived.dst, "left_outer")
-            .select(
-                "id",
-                (
-                    F.lit(base)
-                    + F.expr(f"coalesce(acc, 0L) * {damping_ppm} DIV {PPM}")
-                ).cast("long").alias("score"),
+        scores = nodes.withColumn("score", F.lit(s0).cast("long"))
+        for _ in range(iterations):
+            arrived = (
+                ed.join(_state(scores, n), ed.src == scores.id)
+                .select("dst", F.expr("score DIV deg").alias("c"))
+                .groupBy("dst")
+                .agg(F.sum("c").alias("acc"))
             )
-        )
-        scores = _pin_state(scores)
-    _release(pins)  # result is materialized (eager state pin) — pins done
+            scores = (
+                nodes.join(_state(arrived, n), nodes.id == arrived.dst, "left_outer")
+                .select(
+                    "id",
+                    (
+                        F.lit(base)
+                        + F.expr(f"coalesce(acc, 0L) * {damping_ppm} DIV {PPM}")
+                    ).cast("long").alias("score"),
+                )
+            )
+            scores = _pin_state(scores)
+    finally:
+        _release(pins)
     return scores
 
 
@@ -939,53 +941,55 @@ def personalized_pagerank(
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     pins: list = []
-    ed = _pin_keyed(e.join(deg, "src"), "src", scope=pins)
-    sd = seeds.select(F.col(seeds.columns[0]).alias("id")).distinct()
-    # Node ids from the PINNED ed (identical id set; see pagerank) — the
-    # nodes pin reads materialized blocks instead of re-running the edge
-    # distinct as a second corpus pass.
-    nodes = _pin_keyed(
-        ed.select(F.col("src").alias("id"))
-        .unionByName(ed.select(F.col("dst").alias("id")))
-        .distinct()
-        .join(sd.withColumn("_seed", F.lit(1)), "id", "left_outer")
-        .select("id", F.coalesce("_seed", F.lit(0)).alias("is_seed")),
-        "id",
-        scope=pins,
-    )
-    n = nodes.count()
-    ns = nodes.where(F.col("is_seed") == 1).count()
-    if ns == 0:
-        raise ValueError("personalized_pagerank: no seed appears in the edge list")
-    s0 = scale // ns
-    base = (PPM - damping_ppm) * s0 // PPM
+    try:
+        ed = _pin_keyed(e.join(deg, "src"), "src", scope=pins)
+        sd = seeds.select(F.col(seeds.columns[0]).alias("id")).distinct()
+        # Node ids from the PINNED ed (identical id set; see pagerank) — the
+        # nodes pin reads materialized blocks instead of re-running the edge
+        # distinct as a second corpus pass.
+        nodes = _pin_keyed(
+            ed.select(F.col("src").alias("id"))
+            .unionByName(ed.select(F.col("dst").alias("id")))
+            .distinct()
+            .join(sd.withColumn("_seed", F.lit(1)), "id", "left_outer")
+            .select("id", F.coalesce("_seed", F.lit(0)).alias("is_seed")),
+            "id",
+            scope=pins,
+        )
+        n = nodes.count()
+        ns = nodes.where(F.col("is_seed") == 1).count()
+        if ns == 0:
+            raise ValueError("personalized_pagerank: no seed appears in the edge list")
+        s0 = scale // ns
+        base = (PPM - damping_ppm) * s0 // PPM
 
-    scores = nodes.select(
-        "id",
-        F.when(F.col("is_seed") == 1, F.lit(s0))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("score"),
-    )
-    for _ in range(iterations):
-        arrived = (
-            ed.join(_state(scores, n), ed.src == scores.id)
-            .select("dst", F.expr("score DIV deg").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("acc"))
+        scores = nodes.select(
+            "id",
+            F.when(F.col("is_seed") == 1, F.lit(s0))
+            .otherwise(F.lit(0))
+            .cast("long")
+            .alias("score"),
         )
-        scores = (
-            nodes.join(_state(arrived, n), nodes.id == arrived.dst, "left_outer")
-            .select(
-                "id",
-                (
-                    F.when(F.col("is_seed") == 1, F.lit(base)).otherwise(F.lit(0))
-                    + F.expr(f"coalesce(acc, 0L) * {damping_ppm} DIV {PPM}")
-                ).cast("long").alias("score"),
+        for _ in range(iterations):
+            arrived = (
+                ed.join(_state(scores, n), ed.src == scores.id)
+                .select("dst", F.expr("score DIV deg").alias("c"))
+                .groupBy("dst")
+                .agg(F.sum("c").alias("acc"))
             )
-        )
-        scores = _pin_state(scores)
-    _release(pins)
+            scores = (
+                nodes.join(_state(arrived, n), nodes.id == arrived.dst, "left_outer")
+                .select(
+                    "id",
+                    (
+                        F.when(F.col("is_seed") == 1, F.lit(base)).otherwise(F.lit(0))
+                        + F.expr(f"coalesce(acc, 0L) * {damping_ppm} DIV {PPM}")
+                    ).cast("long").alias("score"),
+                )
+            )
+            scores = _pin_state(scores)
+    finally:
+        _release(pins)
     return scores
 
 

@@ -25,6 +25,8 @@ per-row Python executes.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -85,11 +87,15 @@ def resample(bars: DataFrame, frame: str) -> DataFrame:
     return resample_intraday(bars, DEFAULT_SPECS[frame])
 
 
-def resample_all(bars: DataFrame, frames: list[str] | None = None) -> dict[str, DataFrame]:
-    """All frames from one input (reference aggregates every frame per job,
-    aggregation/application/services.py:46-107). Each frame is an independent
-    lazy plan; Spark schedules them concurrently when actions overlap."""
-    return {f: resample(bars, f) for f in (frames or list(DEFAULT_SPECS))}
+def resample_all(bars: DataFrame, frames: list[str] | None = None) -> DataFrame:
+    """Every frame of ``frames`` (default: all) from one input, as the
+    reference aggregates a job (aggregation/application/services.py:46-107):
+    one DataFrame, the union of ``resample(bars, f)`` with a ``frame`` column,
+    which one ``lake.upsert_bars`` lands."""
+    return functools.reduce(
+        DataFrame.unionByName,
+        (resample(bars, f).withColumn("frame", F.lit(f)) for f in frames or DEFAULT_SPECS),
+    )
 
 
 def refresh_resample(

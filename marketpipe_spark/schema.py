@@ -56,15 +56,6 @@ BARS_V1_SCHEMA = T.StructType(
     ]
 )
 
-#: Validation error rows (reference: validation/domain/value_objects.py:9-29).
-ERRORS_SCHEMA = T.StructType(
-    [
-        T.StructField("symbol", T.StringType(), False),
-        T.StructField("ts_ns", T.LongType(), False),
-        T.StructField("reason", T.StringType(), False),
-    ]
-)
-
 #: SCD-2 symbol master (reference: ingestion/normalizer/scd_writer.py:444-465).
 SYMBOLS_MASTER_SCHEMA = T.StructType(
     [

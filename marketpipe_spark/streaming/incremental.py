@@ -24,12 +24,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..control import CheckpointStore
-
-NS_DAY = 86_400_000_000_000
+from ..functions import NS_PER_DAY, trading_date
 
 
 def _day_start_ns(day: dt.date) -> int:
-    return (day - dt.date(1970, 1, 1)).days * NS_DAY
+    return (day - dt.date(1970, 1, 1)).days * NS_PER_DAY
 
 
 def incremental_job(
@@ -68,8 +67,8 @@ def incremental_job(
     checkpoint OUTSIDE [start, end) is stale and ignored — the symbol
     restarts from the window start (reference services.py:475-491).
     """
-    from ..lake import BAR_COLUMNS, read_bars, upsert_bars
-    from ..operators.resample import resample
+    from ..lake import BAR_COLUMNS, filter_all, read_bars, upsert_bars
+    from ..operators.resample import resample_all
     from ..operators.validation import split_valid
 
     if window_start_ns is not None:
@@ -79,26 +78,21 @@ def incremental_job(
 
     # resume: drop rows at or before each symbol's checkpoint — unless the
     # checkpoint is stale (outside the job window), in which case it is
-    # ignored entirely (services.py:480-487).
-    cps = (
-        checkpoints.load()
-        .filter(F.col("job_id") == job_id)
-        .select("symbol", "last_processed_ns")
-    )
-    if window_start_ns is not None:
-        cps = cps.filter(F.col("last_processed_ns") >= window_start_ns)
-    if window_end_ns is not None:
-        cps = cps.filter(F.col("last_processed_ns") < window_end_ns)
-    fresh = new_bars.join(F.broadcast(cps), "symbol", "left_outer").filter(
-        F.col("last_processed_ns").isNull() | (F.col("ts_ns") > F.col("last_processed_ns"))
-    ).drop("last_processed_ns")
+    # ignored entirely (services.py:480-487). The checkpoint rows are a local
+    # relation, so collecting them runs no Spark job; they become one literal
+    # predicate per symbol.
+    resume = {
+        r.symbol: r.last_processed_ns
+        for r in checkpoints.load().collect()
+        if r.job_id == job_id
+        and (window_start_ns is None or r.last_processed_ns >= window_start_ns)
+        and (window_end_ns is None or r.last_processed_ns < window_end_ns)
+    }
+    fresh = filter_all(new_bars, [
+        ~F.col("symbol").eqNullSafe(s) | (F.col("ts_ns") > ns) for s, ns in resume.items()
+    ])
 
-    # Exact integer date math (shared trading_date): double division on an
-    # int64 ns epoch loses precision above 2^53 and can bucket a row within
-    # ~128 ns of midnight into the WRONG partition day.
-    from ..functions import trading_date
-
-    day = trading_date("ts_ns").alias("date")
+    day = trading_date("ts_ns").alias("date")  # exact integer date math
     if jobs is not None:
         units = [(r.symbol, r.date) for r in fresh.select("symbol", day).distinct().collect()]
         if units:
@@ -111,10 +105,9 @@ def incremental_job(
 
     try:
         valid, errors = split_valid(fresh, market_hours=market_hours)
-        # Pin the validated batch once: its plan (checkpoint join + 13-rule
-        # validation pass) otherwise re-executes for the raw upsert, every
-        # frame's touched-join, the stats collect, and the errors output —
-        # ~6 recomputations of the same work per increment.
+        # Pin the validated batch once: its plan (checkpoint filter + 13-rule
+        # validation pass) otherwise re-executes for the raw upsert's collect
+        # and write and for the stats collect.
         valid = valid.localCheckpoint(eager=True)
         upsert_bars(valid, raw_root, "1m", ingest_id=job_id)
 
@@ -140,23 +133,24 @@ def incremental_job(
                     spark, raw_root, frame="1m",
                     symbols=sorted({r.symbol for r in stats}),
                     start_ns=_day_start_ns(min(days)),
-                    end_ns=_day_start_ns(max(days)) + NS_DAY - 1,
+                    end_ns=_day_start_ns(max(days)) + NS_PER_DAY - 1,
                     columns=BAR_COLUMNS,
                 )
                 .join(F.broadcast(touched), ["symbol", "date"], "left_semi")
                 .select(*BAR_COLUMNS)
-                # One lake scan, re-used by every frame's resample below.
-                .localCheckpoint(eager=True)
             )
         # Returned outputs are pinned with an eager localCheckpoint: their lazy
-        # plans read the checkpoint table and lake partitions that THIS job (and
-        # the next increment) overwrite — evaluating them later must not re-read
-        # mutated files. The increment's slices are small by construction.
+        # plans read lake partitions that THIS job (and the next increment)
+        # overwrite — evaluating them later must not re-read mutated files.
+        # The increment's slices are small by construction. One pin holds
+        # every frame: it reads the slice once, feeds the one upsert of all
+        # frames, and each frame's output is a filter of it.
         outputs: dict[str, DataFrame] = {"errors": errors.localCheckpoint(eager=True)}
-        for frame in frames or ["5m", "1h", "1d"]:
-            agg = resample(slice_df, frame).localCheckpoint(eager=True)
-            upsert_bars(agg, agg_root, frame, ingest_id=job_id)
-            outputs[frame] = agg
+        frames = frames or ["5m", "1h", "1d"]
+        aggs = resample_all(slice_df, frames).localCheckpoint(eager=True)
+        upsert_bars(aggs, agg_root, ingest_id=job_id)
+        for frame in frames:
+            outputs[frame] = aggs.filter(F.col("frame") == frame).drop("frame")
     except Exception as e:
         if jobs is not None:
             jobs.fail(job_id, str(e))
@@ -231,7 +225,7 @@ def backfill_gaps(
         incremental_job(
             spark, job_id, fetch_day(syms, day), raw_root, agg_root, checkpoints,
             frames=frames, market_hours=market_hours, jobs=jobs, metrics=metrics,
-            window_start_ns=day_start, window_end_ns=day_start + NS_DAY,
+            window_start_ns=day_start, window_end_ns=day_start + NS_PER_DAY,
         )
         filled[day] = syms
     return filled

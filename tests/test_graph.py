@@ -714,10 +714,11 @@ def test_pagerank_weighted_uniform_equals_plain(spark):
 def test_pagerank_weighted_guards(spark, monkeypatch):
     """r8 ADVICE: empty edge list and NULL/non-positive weights fail loudly
     instead of ZeroDivisionError / silent NULL propagation, and the pins
-    taken before the guard raised are released."""
+    taken before the guard raised are released — by pagerank_weighted and
+    by the guards of pagerank and personalized_pagerank too."""
     import pytest
 
-    from marketpipe_spark.operators.graph import pagerank_weighted
+    from marketpipe_spark.operators.graph import pagerank, pagerank_weighted, personalized_pagerank
 
     def disk_only_rdds():
         return {
@@ -737,6 +738,11 @@ def test_pagerank_weighted_guards(spark, monkeypatch):
     null_w = spark.createDataFrame([(1, 2, None)], "src long, dst long, w long")
     with pytest.raises(ValueError, match="positive"):
         pagerank_weighted(null_w, iterations=1)
+    with pytest.raises(ValueError, match="empty edge list"):
+        pagerank(empty.select("src", "dst"), iterations=1)
+    no_seed = spark.createDataFrame([(9,)], "id long")
+    with pytest.raises(ValueError, match="no seed"):
+        personalized_pagerank(bad.select("src", "dst"), no_seed, iterations=1)
     leaked = disk_only_rdds() - pre_existing
     assert not leaked, f"DISK_ONLY pins leaked by the raising calls: {leaked}"
 

@@ -40,9 +40,13 @@ def test_multi_symbol_independent(spark, golden_bars):
 
 
 def test_resample_all_frames(golden_bars):
-    frames = resample_all(golden_bars)
-    assert set(frames) == {"5m", "15m", "1h", "4h", "1d"}
-    assert frames["1h"].count() == 1
+    """One DataFrame: each frame's resample, tagged with its frame."""
+    out = resample_all(golden_bars)
+    assert out.columns == [*resample(golden_bars, "5m").columns, "frame"]
+    counts = dict(out.groupBy("frame").count().collect())
+    assert counts == {"5m": 2, "15m": 2, "1h": 1, "4h": 1, "1d": 1}
+    picked = resample_all(golden_bars, ["1d", "5m"])
+    assert sorted(r.frame for r in picked.collect()) == ["1d", "5m", "5m"]
 
 
 # ---------------------------------------------------------------------------

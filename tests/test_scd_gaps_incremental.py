@@ -167,8 +167,17 @@ def test_incremental_job_checkpoints_and_slices(spark, tmp_path):
     assert cps.last_processed("job1", "AAPL") == day1 + 9 * NS_MIN
     assert out1["5m"].count() == 2  # 10 minutes -> two 5m buckets
 
-    # second increment overlaps the checkpoint: first 10 rows already seen
-    out2 = incremental_job(spark, "job1", _bars(spark, "AAPL", day1, 15), raw, agg, cps)
+    # second increment overlaps the checkpoint: first 10 rows already seen.
+    # It lands raw 1m and all three frames in a bounded number of Spark jobs.
+    sc = spark.sparkContext
+    group = "test-incremental-second-increment"
+    sc.setJobGroup(group, "second increment")
+    try:
+        out2 = incremental_job(spark, "job1", _bars(spark, "AAPL", day1, 15), raw, agg, cps)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= 30, n_jobs
     assert cps.last_processed("job1", "AAPL") == day1 + 14 * NS_MIN
     raw_rows = read_bars(spark, raw, frame="1m").count()
     assert raw_rows == 15  # no duplicates landed
