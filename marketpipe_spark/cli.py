@@ -140,15 +140,18 @@ def cmd_backfill(args) -> int:
 
 
 def cmd_aggregate(args) -> int:
-    from .lake import BAR_COLUMNS, read_bars, upsert_bars
+    from .lake import BAR_COLUMNS, _write_partitioned, read_bars
     from .operators.resample import resample_all
 
     spark = _spark("aggregate")
     raw = read_bars(spark, args.root, frame="1m", columns=BAR_COLUMNS).select(*BAR_COLUMNS)
     frames = args.frames.split(",")
-    aggs = resample_all(raw, frames)
-    upsert_bars(aggs, args.agg_root)
+    # Pinned: the counts and the write read one resample, not two. Every
+    # partition is derived whole from its raw day, so it replaces the old one.
+    aggs = resample_all(raw, frames).localCheckpoint(eager=True)
     counts = dict(aggs.groupBy("frame").count().collect())
+    if counts:  # an empty write would leave a root holding only _SUCCESS
+        _write_partitioned(aggs, args.agg_root, None, "overwrite")
     for frame in frames:
         print(f"aggregated frame {frame}: {counts.get(frame, 0)} bars")
     return 0

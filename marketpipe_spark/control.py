@@ -568,6 +568,13 @@ class CheckpointStore(_SqlStore):
         ]
         return self.spark.createDataFrame(rows, CHECKPOINT_SCHEMA)
 
+    def positions(self, job_id: str) -> dict[str, int]:
+        """symbol -> last processed ``ts_ns`` of ``job_id``: one SQL read,
+        no Spark job."""
+        return dict(self._read(
+            "SELECT symbol, last_processed_ns FROM checkpoints WHERE job_id = ?", (job_id,)
+        ))
+
     def last_processed(self, job_id: str, symbol: str) -> int | None:
         rows = self._read(
             "SELECT last_processed_ns FROM checkpoints WHERE job_id = ? AND symbol = ?",

@@ -17,8 +17,8 @@ columns keep fixed types (``frame``/``symbol`` string, ``date`` date): a
 lone ``frame=1d`` directory would otherwise be inferred as a double.
 
 Writes enforce one schema, as the reference writes its minimal one
-(parquet_engine.py:83-86,220-231): every writer goes through
-``_write_partitioned``, which casts to ``BARS_MIN_SCHEMA`` plus a nullable
+(parquet_engine.py:83-86,220-231): every writer lays its rows out with
+``_layout``, which casts to ``BARS_MIN_SCHEMA`` plus a nullable
 ``ingest_id`` and drops any other column. ``upsert_bars`` therefore reads
 the partitions it rewrites under that fixed schema; only
 ``compact_partitions``, which repairs files the program may not have
@@ -29,6 +29,9 @@ Write semantics reproduced:
   reference's inter-process file locks, parquet_engine.py:97-99)
 - K2 upsert-append with keep-last dedup on (frame, symbol, ts_ns)
   (parquet_engine.py:127-182) via dynamic partition overwrite
+- frames derived whole from their raw days replace their partitions
+  (``_write_partitioned`` in overwrite mode), as the reference writes a
+  job's aggregates (aggregation/application/services.py:46-107)
 - K7 retention pruning by partition date (cli/prune.py:17-36)
 
 Scale: dynamic partition overwrite touches only the partitions present in
@@ -92,31 +95,49 @@ _INGEST_ID = T.StructField("ingest_id", T.StringType())
 _UPSERT_READ_SCHEMA = T.StructType(bars_schema().fields + [_INGEST_ID])
 
 
-def _write_partitioned(bars: DataFrame, root: str, frame: str | None, mode: str) -> None:
-    """The lake's one write: ``bars`` selected and cast to ``BARS_MIN_SCHEMA``
-    (plus ``ingest_id`` when ``bars`` has it), with ``date`` added and
-    ``frame`` set to ``frame``, or kept from ``bars``'s ``frame`` column when
-    that is None. One writer task and one ``ts_ns``-sorted file per
-    ``frame/symbol/date`` partition. ``mode="overwrite"`` replaces only the
-    partitions written (dynamic partition overwrite, ``session.tune``)."""
-    tune(bars.sparkSession)
-    kept = [f for f in (_INGEST_ID, _PARTITION_FIELDS["frame"]) if f.name in bars.columns]
+def _layout(bars: DataFrame, frame: str | None, keep_first: list | None = None) -> DataFrame:
+    """``bars`` as the lake writes them: selected and cast to
+    ``BARS_MIN_SCHEMA`` (plus ``ingest_id`` when ``bars`` has it), with
+    ``date`` added and ``frame`` set to ``frame``, or kept from ``bars``'s
+    ``frame`` column when that is None; all rows of a ``frame/symbol/date``
+    partition in one task, sorted by ``ts_ns``. With ``keep_first`` (sort
+    columns of ``bars``), only the first row in that order of each
+    ``(frame, symbol, ts_ns)`` key is kept, within the same shuffle."""
+    kept = [_INGEST_ID] if _INGEST_ID.name in bars.columns else []
     added = {"date": trading_date("ts_ns")} | ({"frame": F.lit(frame)} if frame else {})
+    # One task per partition: the frames of a (symbol, date) share it. Keyed
+    # without frame, which Spark folds out of the window's keys when it is a
+    # literal; the window must then still find its groups clustered.
+    laid = bars.withColumns(added).repartition("symbol", "date")
+    if keep_first:
+        # date is a function of ts_ns: keying on it too leaves the groups as
+        # they are and lets the window reuse the repartition's shuffle.
+        first = W.partitionBy("frame", "symbol", "date", "ts_ns").orderBy(*keep_first)
+        laid = laid.withColumn("_rn", F.row_number().over(first)).filter(F.col("_rn") == 1)
     # The planned write re-sorts each task by the partition columns unless its
     # input already is, which loses ts_ns order. Spark folds a literal frame
     # out of any sort key, so the key names frame only when it is data.
     order = ("symbol", "date", "ts_ns") if frame else ("frame", "symbol", "date", "ts_ns")
-    (
+    return (
         # One call each, not one Column per field: building a Column costs a
         # JVM round trip and a call-site capture.
-        bars.to(T.StructType(_WRITE_FIELDS + kept))
-        .withColumns(added)
-        .repartition("frame", "symbol", "date")  # one writer task per partition
+        laid.to(T.StructType(_WRITE_FIELDS + kept + [_PARTITION_FIELDS[c] for c in ("frame", "date")]))
         .sortWithinPartitions(*order)  # reference sorts within file (engine:162-164)
-        .write.mode(mode)
-        .partitionBy("frame", "symbol", "date")
-        .parquet(root)
     )
+
+
+def _write_laid_out(laid: DataFrame, root: str, mode: str) -> None:
+    """Write ``_layout``'s output: one ``ts_ns``-sorted file per partition.
+    ``mode="overwrite"`` replaces only the partitions written (dynamic
+    partition overwrite, ``session.tune``)."""
+    laid.write.mode(mode).partitionBy("frame", "symbol", "date").parquet(root)
+
+
+def _write_partitioned(bars: DataFrame, root: str, frame: str | None, mode: str) -> None:
+    """The lake's one write: ``bars`` laid out by ``_layout`` and written by
+    ``_write_laid_out``."""
+    tune(bars.sparkSession)
+    _write_laid_out(_layout(bars, frame), root, mode)
 
 
 def write_bars(bars: DataFrame, root: str, frame: str, ingest_id: str | None = None) -> None:
@@ -282,7 +303,13 @@ def _existing_partitions(spark: SparkSession, root: str, triples: list) -> list[
     return [p for p in found if "/".join(p.rsplit("/", 3)[-3:]) in wanted]
 
 
-def upsert_bars(new_bars: DataFrame, root: str, frame: str | None = None, ingest_id: str | None = None) -> None:
+def upsert_bars(
+    new_bars: DataFrame,
+    root: str,
+    frame: str | None = None,
+    ingest_id: str | None = None,
+    touched: list[tuple] | None = None,
+) -> DataFrame | None:
     """K2/P7 — append with keep-last dedup on (frame, symbol, ts_ns). A given
     ``frame`` fills the batch's ``frame`` column; without it the batch brings
     its own, so one call lands several frames (whose keys share timestamps:
@@ -290,23 +317,37 @@ def upsert_bars(new_bars: DataFrame, root: str, frame: str | None = None, ingest
 
     The reference reads the partition file, concats, drops duplicate ts
     keeping the last, and rewrites (parquet_engine.py:127-182). Spark
-    version: collect the (frame, symbol, date) partitions the batch touches,
+    version: find the (frame, symbol, date) partitions the batch touches,
     read those directories that exist under a fixed schema (the canonical
     columns plus a nullable ``ingest_id``, so no schema-inference job runs
     and a file without ``ingest_id`` reads it as null), keep the newest row
     per key, and dynamically overwrite ONLY those partitions. A partition or
     root that does not exist yet simply has no existing rows. Incoming rows
     carry ``ingest_id`` (null when none is given); rewritten rows keep
-    theirs. An empty batch writes nothing.
+    theirs.
+
+    ``touched`` lists the batch's ``(symbol, date)`` partitions when the
+    caller already holds them (``(frame, symbol, date)`` without a
+    ``frame``), which saves the collect that finds them; it must cover every
+    row of the batch, or the partitions it misses lose their old rows.
+
+    Returns the merged rows of the rewritten partitions (the canonical
+    columns, ``ingest_id``, ``frame`` and ``date``), pinned with an eager
+    ``localCheckpoint``: the write reads from the pin, and the caller can
+    derive from it without reading the partitions back. An empty batch
+    writes nothing and returns None.
     """
     spark = tune(new_bars.sparkSession)
     if frame is not None:
         new_bars = new_bars.withColumn("frame", F.lit(frame))
-    touched = new_bars.select("frame", "symbol", trading_date("ts_ns")).distinct().collect()
+    if touched is None:
+        touched = new_bars.select("frame", "symbol", trading_date("ts_ns")).distinct().collect()
+    elif frame is not None:
+        touched = [(frame, *pair) for pair in touched]
     # Empty batch: a semantic no-op — and writing it would NOT be one. An
     # empty partitionBy write materializes a root containing only _SUCCESS.
     if not touched:
-        return
+        return None
     # _gen separates existing (0) from incoming (1); _ord is the within-batch
     # tie-breaker so duplicate keys in ONE batch resolve like the
     # reference's drop_duplicates keep='last' (parquet_engine.py:162-164):
@@ -333,9 +374,11 @@ def upsert_bars(new_bars: DataFrame, root: str, frame: str | None = None, ingest
             F.lit(0).cast("long").alias("_ord"),
         )
         merged = existing.unionByName(merged)
-    keep_last = W.partitionBy("frame", "symbol", "ts_ns").orderBy(F.desc("_gen"), F.desc("_ord"))
-    merged = merged.withColumn("_rn", F.row_number().over(keep_last)).filter(F.col("_rn") == 1)
-    _write_partitioned(merged, root, frame, "overwrite")
+    # The pin keeps the layout's partitioning and its (frame, symbol, date,
+    # ts_ns) order, so the write from it neither shuffles nor sorts again.
+    pinned = _layout(merged, None, keep_first=[F.desc("_gen"), F.desc("_ord")]).localCheckpoint(eager=True)
+    _write_laid_out(pinned, root, "overwrite")
+    return pinned
 
 
 AGE_RE = re.compile(r"^(\d+)([dmy]?)$")

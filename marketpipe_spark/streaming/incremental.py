@@ -52,9 +52,14 @@ def incremental_job(
     re-aggregate ONLY the touched (symbol, date) slices → validation report
     → job complete/fail + metrics. Returns the chained outputs.
 
-    Incremental re-aggregation (SURVEY §4 "incremental recompute"): the
-    aggregate legs read back just the partitions the increment touched —
-    at 100 TB a one-day increment reaggregates one day, not the lake.
+    One pass (SURVEY §4 "incremental recompute"): the raw upsert returns its
+    keep-last merge of the touched raw partitions, pinned, and every frame
+    derives from that merge, as the reference aggregates a job from the bars
+    it ingested (aggregation/application/services.py:46-107). A frame's
+    (symbol, day) partition depends only on that raw day, and the merge
+    holds all of it, so the recomputed partitions replace the old ones whole
+    (a dynamic partition overwrite): no aggregate file is read. At 100 TB a
+    one-day increment reaggregates one day, not the lake.
 
     ``jobs`` (control.JobsStore) and ``metrics`` (control.MetricsStore) are
     optional; when given, the reference's control-plane writes happen:
@@ -67,7 +72,7 @@ def incremental_job(
     checkpoint OUTSIDE [start, end) is stale and ignored — the symbol
     restarts from the window start (reference services.py:475-491).
     """
-    from ..lake import BAR_COLUMNS, filter_all, read_bars, upsert_bars
+    from ..lake import BAR_COLUMNS, _write_partitioned, filter_all, upsert_bars
     from ..operators.resample import resample_all
     from ..operators.validation import split_valid
 
@@ -78,15 +83,13 @@ def incremental_job(
 
     # resume: drop rows at or before each symbol's checkpoint — unless the
     # checkpoint is stale (outside the job window), in which case it is
-    # ignored entirely (services.py:480-487). The checkpoint rows are a local
-    # relation, so collecting them runs no Spark job; they become one literal
-    # predicate per symbol.
+    # ignored entirely (services.py:480-487). The positions are SQL rows read
+    # without Spark; they become one literal predicate per symbol.
     resume = {
-        r.symbol: r.last_processed_ns
-        for r in checkpoints.load().collect()
-        if r.job_id == job_id
-        and (window_start_ns is None or r.last_processed_ns >= window_start_ns)
-        and (window_end_ns is None or r.last_processed_ns < window_end_ns)
+        symbol: ns
+        for symbol, ns in checkpoints.positions(job_id).items()
+        if (window_start_ns is None or ns >= window_start_ns)
+        and (window_end_ns is None or ns < window_end_ns)
     }
     fresh = filter_all(new_bars, [
         ~F.col("symbol").eqNullSafe(s) | (F.col("ts_ns") > ns) for s, ns in resume.items()
@@ -106,49 +109,28 @@ def incremental_job(
     try:
         valid, errors = split_valid(fresh, market_hours=market_hours)
         # Pin the validated batch once: its plan (checkpoint filter + 13-rule
-        # validation pass) otherwise re-executes for the raw upsert's collect
-        # and write and for the stats collect.
+        # validation pass) otherwise re-executes for the stats collect and the
+        # raw upsert.
         valid = valid.localCheckpoint(eager=True)
-        upsert_bars(valid, raw_root, "1m", ingest_id=job_id)
-
         # One tiny control-plane agg: the touched (symbol, day) units feed the
-        # slice read below, the checkpoint advance and the job stats.
+        # raw upsert, the checkpoint advance and the job stats.
         stats = valid.groupBy("symbol", day).agg(
             F.max("ts_ns").alias("m"), F.count(F.lit(1)).alias("n")
         ).collect()
-
-        # event-chained legs (function composition, not a bus)
-        if not stats:
-            # Empty increment (boundary e2e): nothing landed, and on a brand-
-            # new lake the raw root may not even exist. The aggregate legs see
-            # an empty slice with the canonical bars shape instead.
-            slice_df = valid.select(*BAR_COLUMNS)
-        else:
-            touched = spark.createDataFrame(
-                [(r.symbol, r.date) for r in stats], "symbol string, date date"
-            )
-            days = [r.date for r in stats]
-            slice_df = (
-                read_bars(
-                    spark, raw_root, frame="1m",
-                    symbols=sorted({r.symbol for r in stats}),
-                    start_ns=_day_start_ns(min(days)),
-                    end_ns=_day_start_ns(max(days)) + NS_PER_DAY - 1,
-                    columns=BAR_COLUMNS,
-                )
-                .join(F.broadcast(touched), ["symbol", "date"], "left_semi")
-                .select(*BAR_COLUMNS)
-            )
-        # Returned outputs are pinned with an eager localCheckpoint: their lazy
-        # plans read lake partitions that THIS job (and the next increment)
-        # overwrite — evaluating them later must not re-read mutated files.
-        # The increment's slices are small by construction. One pin holds
-        # every frame: it reads the slice once, feeds the one upsert of all
-        # frames, and each frame's output is a filter of it.
+        # The pinned keep-last merge of the touched raw partitions; None for an
+        # empty increment, whose frames then come out empty.
+        merged = upsert_bars(
+            valid, raw_root, "1m", ingest_id=job_id, touched=[(r.symbol, r.date) for r in stats]
+        )
+        # Returned outputs are pinned with an eager localCheckpoint, so reading
+        # them re-runs neither validation nor resampling. One pin holds every
+        # frame: the write reads it, and each frame's output is a filter of it.
         outputs: dict[str, DataFrame] = {"errors": errors.localCheckpoint(eager=True)}
         frames = frames or ["5m", "1h", "1d"]
-        aggs = resample_all(slice_df, frames).localCheckpoint(eager=True)
-        upsert_bars(aggs, agg_root, ingest_id=job_id)
+        source = valid if merged is None else merged
+        aggs = resample_all(source.select(*BAR_COLUMNS), frames).localCheckpoint(eager=True)
+        if merged is not None:
+            _write_partitioned(aggs.withColumn("ingest_id", F.lit(job_id)), agg_root, None, "overwrite")
         for frame in frames:
             outputs[frame] = aggs.filter(F.col("frame") == frame).drop("frame")
     except Exception as e:

@@ -252,3 +252,40 @@ def test_upsert_of_one_day_reads_only_its_partition(spark, lake_root):
     with pytest.raises(Exception, match="has no ts_ns"):
         upsert_bars(patch.withColumn("ts_ns", F.lit(day30)), root, "1m")
     assert sorted(os.listdir(part)) == before
+
+
+def test_increment_resending_part_of_a_landed_day(spark, tmp_path):
+    """An increment that re-sends part of a landed day rewrites each touched
+    frame partition as the resample of the merged raw day, reads no file of
+    the aggregate lake, and leaves the other day's aggregate files as they
+    were."""
+    from glob import glob
+
+    from marketpipe_spark.streaming.incremental import CheckpointStore, incremental_job
+
+    raw, agg = str(tmp_path / "raw"), str(tmp_path / "agg")
+    cps = CheckpointStore(spark, str(tmp_path / "cps"))
+    frames = ["5m", "1h", "1d"]
+    landed = fake_bars(spark, ["AAPL"], START, 60).unionByName(fake_bars(spark, ["AAPL"], START + DAY_NS, 60))
+    incremental_job(spark, "land", landed, raw, agg, cps, frames=frames)
+
+    untouched = {p: open(p, "rb").read() for p in glob(f"{agg}/frame=*/symbol=AAPL/date=2024-01-02/*")}
+    touched = glob(f"{agg}/frame=*/symbol=AAPL/date=2024-01-01/*.parquet")
+    assert len(untouched) == len(touched) == 3
+    for path in touched:  # landing fails if it reads any of them
+        with open(path, "wb") as f:
+            f.write(b"not parquet")
+
+    # minutes 30-89 of day 1 with other values, under a job without a checkpoint
+    resend = fake_bars(spark, ["AAPL"], START + 30 * 60 * 10**9, 60, seed=7)
+    out = incremental_job(spark, "resend", resend, raw, agg, cps, frames=frames)
+
+    raw_day = read_bars(spark, raw, frame="1m", start_ns=START, end_ns=START + DAY_NS - 1).select(*BAR_COLUMNS)
+    assert raw_day.count() > 60  # the re-sent minutes extend the day (invalid bars stay out)
+    for frame in frames:
+        want = sorted(resample(raw_day, frame).collect())
+        part = read_bars(spark, agg, frame=frame, start_ns=START, end_ns=START + DAY_NS - 1)
+        assert sorted(part.select(*BAR_COLUMNS).collect()) == want
+        assert {r.ingest_id for r in part.select("ingest_id").collect()} == {"resend"}
+        assert sorted(out[frame].select(*BAR_COLUMNS).collect()) == want
+    assert {p: open(p, "rb").read() for p in glob(f"{agg}/frame=*/symbol=AAPL/date=2024-01-02/*")} == untouched

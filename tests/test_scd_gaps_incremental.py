@@ -157,7 +157,7 @@ def _bars(spark, symbol, day_start_ns, n, base=100.0):
     )
 
 
-def test_incremental_job_checkpoints_and_slices(spark, tmp_path):
+def test_incremental_job_checkpoints_and_slices(spark, tmp_path, monkeypatch):
     raw = str(tmp_path / "raw")
     agg = str(tmp_path / "agg")
     cps = CheckpointStore(spark, str(tmp_path / "cps"))
@@ -171,13 +171,29 @@ def test_incremental_job_checkpoints_and_slices(spark, tmp_path):
     # It lands raw 1m and all three frames in a bounded number of Spark jobs.
     sc = spark.sparkContext
     group = "test-incremental-second-increment"
+    # The resume step reads the job's positions in a job group of its own.
+    resume_group = "test-incremental-resume"
+    read_positions = cps.positions
+    resumed = []
+
+    def positions(job_id):
+        sc.setJobGroup(resume_group, "resume")
+        try:
+            resumed.append(read_positions(job_id))
+            return resumed[-1]
+        finally:
+            sc.setJobGroup(group, "second increment")
+
+    monkeypatch.setattr(cps, "positions", positions)
     sc.setJobGroup(group, "second increment")
     try:
         out2 = incremental_job(spark, "job1", _bars(spark, "AAPL", day1, 15), raw, agg, cps)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+    assert resumed == [{"AAPL": day1 + 9 * NS_MIN}]
+    assert sc.statusTracker().getJobIdsForGroup(resume_group) == []
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert n_jobs <= 30, n_jobs
+    assert n_jobs <= 18, n_jobs
     assert cps.last_processed("job1", "AAPL") == day1 + 14 * NS_MIN
     raw_rows = read_bars(spark, raw, frame="1m").count()
     assert raw_rows == 15  # no duplicates landed
