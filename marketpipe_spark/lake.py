@@ -27,7 +27,7 @@ written, infers.
 Write semantics reproduced:
 - K1/K3 partitioned write (zstd; task-commit protocol replaces the
   reference's inter-process file locks, parquet_engine.py:97-99)
-- K2 upsert-append with keep-last dedup on (frame, symbol, ts_ns)
+- K2 upsert-append with keep-last dedup on (symbol, ts_ns)
   (parquet_engine.py:127-182) via dynamic partition overwrite
 - frames derived whole from their raw days replace their partitions
   (``_write_partitioned`` in overwrite mode), as the reference writes a
@@ -170,20 +170,17 @@ _GLOB_MAX_DAYS = 366
 
 def _partition_glob(
     root: str,
-    frames: list[str],
+    frame: str,
     symbols: list[str] | None,
     first_day: dt.date | None,
     last_day: dt.date | None,
 ) -> tuple[str | None, bool]:
     """Hadoop glob of the partition directories a request reads:
-    ``root/frame=F/symbol={S1,S2}/date={D1,D2,...}`` (``frame={F1,F2}`` for
-    several frames), and whether it names the requested symbols and days
-    exactly. None when the range is empty."""
+    ``root/frame=F/symbol={S1,S2}/date={D1,D2,...}``, and whether it names
+    the requested symbols and days exactly. None when the range is empty."""
     if first_day and last_day and first_day > last_day:
         return None, True
-    names = [_escape(f) for f in frames]
-    frame_glob = _alternatives(names) if len(names) > 1 else _glob_escape(names[0])
-    glob = f"{_glob_escape(root)}/frame={frame_glob}"
+    glob = f"{_glob_escape(root)}/frame={_glob_escape(_escape(frame))}"
     symbol_glob = "/symbol=" + (_alternatives(_escape(s) for s in symbols) if symbols else "*")
     if first_day is None and last_day is None:
         return (glob + symbol_glob if symbols else glob), True
@@ -253,7 +250,7 @@ def read_bars(
     if frame is None or not fs.exists(hroot):
         paths, exact = [root], False  # a missing root raises here, as it always has
     else:
-        glob, exact = _partition_glob(root, [frame], symbols, first_day, last_day)
+        glob, exact = _partition_glob(root, frame, symbols, first_day, last_day)
         found = glob and fs.globStatus(jvm.org.apache.hadoop.fs.Path(glob))
         paths = [glob] if found else []
     if paths:
@@ -288,37 +285,34 @@ def _utc_day(ts_ns: int) -> dt.date:
     return dt.date(1970, 1, 1) + dt.timedelta(days=ts_ns // NS_PER_DAY)
 
 
-def _existing_partitions(spark: SparkSession, root: str, triples: list) -> list[str]:
-    """The ``root/frame=F/symbol=S/date=D`` directories of the (frame,
-    symbol, date) ``triples`` that exist: one glob over the triples' frames,
-    symbols and day range, cut to the exact triples. Existence goes through
-    the Hadoop FS API, so an hdfs:// or s3a:// root is seen as it is."""
+def _existing_partitions(spark: SparkSession, root: str, frame: str, pairs: list) -> list[str]:
+    """The ``root/frame=F/symbol=S/date=D`` directories of the (symbol, date)
+    ``pairs`` that exist: one glob over the pairs' symbols and day range,
+    cut to the exact pairs. Existence goes through the Hadoop FS API, so an
+    hdfs:// or s3a:// root is seen as it is."""
     fs, hroot, jvm = _hadoop_fs(spark, root)
     if not fs.exists(hroot):
         return []
-    frames, symbols, days = (sorted(set(col)) for col in zip(*triples))
-    glob, _ = _partition_glob(root, frames, symbols, days[0], days[-1])
-    wanted = {f"frame={_escape(f)}/symbol={_escape(s)}/date={d.isoformat()}" for f, s, d in triples}
+    symbols, days = (sorted(set(col)) for col in zip(*pairs))
+    glob, _ = _partition_glob(root, frame, symbols, days[0], days[-1])
+    wanted = {f"symbol={_escape(s)}/date={d.isoformat()}" for s, d in pairs}
     found = (st.getPath().toString() for st in fs.globStatus(jvm.org.apache.hadoop.fs.Path(glob)) or [])
-    return [p for p in found if "/".join(p.rsplit("/", 3)[-3:]) in wanted]
+    return [p for p in found if "/".join(p.rsplit("/", 2)[-2:]) in wanted]
 
 
 def upsert_bars(
     new_bars: DataFrame,
     root: str,
-    frame: str | None = None,
+    frame: str,
     ingest_id: str | None = None,
     touched: list[tuple] | None = None,
 ) -> DataFrame | None:
-    """K2/P7 — append with keep-last dedup on (frame, symbol, ts_ns). A given
-    ``frame`` fills the batch's ``frame`` column; without it the batch brings
-    its own, so one call lands several frames (whose keys share timestamps:
-    the 5m bucket and the 1d bar at 13:30 are two bars).
+    """K2/P7 — append with keep-last dedup on (symbol, ts_ns).
 
     The reference reads the partition file, concats, drops duplicate ts
     keeping the last, and rewrites (parquet_engine.py:127-182). Spark
-    version: find the (frame, symbol, date) partitions the batch touches,
-    read those directories that exist under a fixed schema (the canonical
+    version: find the (symbol, date) partitions the batch touches, read
+    those directories that exist under a fixed schema (the canonical
     columns plus a nullable ``ingest_id``, so no schema-inference job runs
     and a file without ``ingest_id`` reads it as null), keep the newest row
     per key, and dynamically overwrite ONLY those partitions. A partition or
@@ -326,10 +320,9 @@ def upsert_bars(
     carry ``ingest_id`` (null when none is given); rewritten rows keep
     theirs.
 
-    ``touched`` lists the batch's ``(symbol, date)`` partitions when the
-    caller already holds them (``(frame, symbol, date)`` without a
-    ``frame``), which saves the collect that finds them; it must cover every
-    row of the batch, or the partitions it misses lose their old rows.
+    ``touched``: the batch's ``(symbol, date)`` partitions, when the caller
+    holds them (it saves a collect); it must cover every row of the batch,
+    or the partitions it misses lose their old rows.
 
     Returns the merged rows of the rewritten partitions (the canonical
     columns, ``ingest_id``, ``frame`` and ``date``), pinned with an eager
@@ -338,12 +331,8 @@ def upsert_bars(
     writes nothing and returns None.
     """
     spark = tune(new_bars.sparkSession)
-    if frame is not None:
-        new_bars = new_bars.withColumn("frame", F.lit(frame))
     if touched is None:
-        touched = new_bars.select("frame", "symbol", trading_date("ts_ns")).distinct().collect()
-    elif frame is not None:
-        touched = [(frame, *pair) for pair in touched]
+        touched = new_bars.select("symbol", trading_date("ts_ns")).distinct().collect()
     # Empty batch: a semantic no-op — and writing it would NOT be one. An
     # empty partitionBy write materializes a root containing only _SUCCESS.
     if not touched:
@@ -355,17 +344,17 @@ def upsert_bars(
     # plan is — a shuffled batch with intra-batch duplicate keys should be
     # pre-deduped with keep_last by the caller.)
     merged = new_bars.select(
-        "frame", *BAR_COLUMNS,
+        F.lit(frame).alias("frame"), *BAR_COLUMNS,
         F.lit(ingest_id).cast("string").alias("ingest_id"),
         F.lit(1).alias("_gen"),
         F.monotonically_increasing_id().alias("_ord"),
     )
-    paths = _existing_partitions(spark, root, touched)
+    paths = _existing_partitions(spark, root, frame, touched)
     if paths:
         # A file the lake's writer did not write may lack ts_ns and read it as
         # null; rewriting would move its rows out of the partition, so the
         # write fails instead and leaves the partition as it was.
-        no_ts = F.raise_error(F.lit(f"upsert_bars: a file under {root} has no ts_ns"))
+        no_ts = F.raise_error(F.lit(f"upsert_bars: a file under {root}/frame={frame} has no ts_ns"))
         existing = scan_partitions(spark, root, paths, _UPSERT_READ_SCHEMA).select(
             "frame", F.coalesce("ts_ns", no_ts).alias("ts_ns"),
             *(c for c in BAR_COLUMNS if c != "ts_ns"),

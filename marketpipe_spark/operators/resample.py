@@ -91,7 +91,7 @@ def resample_all(bars: DataFrame, frames: list[str] | None = None) -> DataFrame:
     """Every frame of ``frames`` (default: all) from one input, as the
     reference aggregates a job (aggregation/application/services.py:46-107):
     one DataFrame, the union of ``resample(bars, f)`` with a ``frame`` column,
-    which one ``lake.upsert_bars`` lands."""
+    which one ``lake._write_partitioned`` writes."""
     return functools.reduce(
         DataFrame.unionByName,
         (resample(bars, f).withColumn("frame", F.lit(f)) for f in frames or DEFAULT_SPECS),

@@ -9,7 +9,8 @@ output is one ``errors(symbol, ts_ns, reason)`` DataFrame
 Design: each rule contributes ``when(violation, reason)`` into an array;
 ``explode`` emits one error row per violated rule. One scan + one per-symbol
 window (for the lag/trailing rules) — no unions of N filtered subplans, so a
-100 TB validation pass stays a single job with two stages.
+100 TB validation pass stays a single job with two stages; ``split_valid``
+pins that pass once and reads its valid and its error rows from the pin.
 """
 
 from __future__ import annotations
@@ -48,6 +49,13 @@ def validate_bars(
     diagnosed hot symbols (``skew.plan_trailing_skew`` — plain plan when
     no symbol crosses the straggler threshold).
     """
+    return _with_reasons(bars, market_hours, skew_span).select(
+        "symbol", "ts_ns", F.explode("reasons").alias("reason")
+    )
+
+
+def _with_reasons(bars: DataFrame, market_hours: bool, skew_span: int | str | None = None) -> DataFrame:
+    """``bars`` plus ``reasons``, the rules each row violates (args: ``validate_bars``)."""
     from .skew import chunked_trailing_frame, resolve_trailing_skew
 
     skew_span, hot = resolve_trailing_skew(bars, "symbol", "ts_ns", skew_span)
@@ -131,25 +139,24 @@ def validate_bars(
     reasons = F.array_compact(
         F.array(*[F.when(cond, F.lit(reason)) for reason, cond in rules])
     )
-    out = src.select(
-        "symbol",
-        "ts_ns",
-        reasons.alias("reasons"),
-        *(["_carry"] if skew_span is not None else []),
-    )
-    if skew_span is not None:
-        out = out.filter(F.col("_carry") == 0).drop("_carry")
-    return out.filter(F.size("reasons") > 0).select(
-        "symbol", "ts_ns", F.explode("reasons").alias("reason")
-    )
+    out = src.withColumn("reasons", reasons)
+    return out if skew_span is None else out.filter(F.col("_carry") == 0).drop("_carry", "_chunk")
 
 
 def split_valid(bars: DataFrame, *, market_hours: bool = True) -> tuple[DataFrame, DataFrame]:
     """(valid, errors) — the reference lets valid bars pass through and
-    reports the rest (ingestion/application/services.py:512-529)."""
-    errors = validate_bars(bars, market_hours=market_hours)
-    bad_keys = errors.select("symbol", "ts_ns").distinct()
-    valid = bars.join(bad_keys, ["symbol", "ts_ns"], "left_anti")
+    reports the rest (ingestion/application/services.py:512-529).
+
+    The rules run once, pinned eagerly; ``valid`` (``bars``' columns) and
+    ``errors`` (``validate_bars``' output) read the pin. A row is invalid when
+    any row with its ``(symbol, ts_ns)`` key has a reason, so every copy of a
+    dup leaves; a row with a null ``symbol`` or ``ts_ns`` stays valid."""
+    # Reuses the rules' symbol shuffle and ts_ns sort: no new exchange or sort.
+    key_bad = F.max(F.size("reasons")).over(W.partitionBy("symbol", "ts_ns")) > 0
+    bad = key_bad & F.col("symbol").isNotNull() & F.col("ts_ns").isNotNull()
+    pinned = _with_reasons(bars, market_hours).withColumn("_bad", bad).localCheckpoint(eager=True)
+    valid = pinned.filter(~F.col("_bad")).select(*bars.columns)
+    errors = pinned.select("symbol", "ts_ns", F.explode("reasons").alias("reason"))
     return valid, errors
 
 

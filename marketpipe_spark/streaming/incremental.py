@@ -48,7 +48,7 @@ def incremental_job(
     window_end_ns: int | None = None,
 ) -> dict[str, DataFrame]:
     """One ingestion increment, reproducing the reference's chain:
-    job create/start → checkpoint-filter → validate → land raw →
+    checkpoint-filter → validate → job create/start → land raw →
     re-aggregate ONLY the touched (symbol, date) slices → validation report
     → job complete/fail + metrics. Returns the chained outputs.
 
@@ -95,11 +95,22 @@ def incremental_job(
         ~F.col("symbol").eqNullSafe(s) | (F.col("ts_ns") > ns) for s, ns in resume.items()
     ])
 
-    day = trading_date("ts_ns").alias("date")  # exact integer date math
+    # Validate once: split_valid's outputs read one pin, and one grouped collect
+    # gives each (symbol, date) its newest valid ts_ns, valid and error counts.
+    # An invalid row shares its key and date with an error row: groups = units.
+    valid, errors = split_valid(fresh, market_hours=market_hours)
+    ok = F.col("ok")
+    groups = (
+        valid.select("symbol", "ts_ns", F.lit(True).alias("ok"))
+        .unionByName(errors.select("symbol", "ts_ns", F.lit(False).alias("ok")))
+        .groupBy("symbol", trading_date("ts_ns").alias("date"))  # exact integer date math
+        .agg(F.max(F.when(ok, F.col("ts_ns"))).alias("m"), F.count_if(ok).alias("n"), F.count_if(~ok).alias("e"))
+        .collect()
+    )
+    stats = [r for r in groups if r.n]
     if jobs is not None:
-        units = [(r.symbol, r.date) for r in fresh.select("symbol", day).distinct().collect()]
-        if units:
-            jobs.create(job_id, units)
+        if groups:
+            jobs.create(job_id, [(r.symbol, r.date) for r in groups])
             jobs.start(job_id)
         else:
             jobs = None  # nothing to ingest — no work units to track
@@ -107,25 +118,15 @@ def incremental_job(
         metrics.record("ingest_jobs", 1.0, provider, feed)
 
     try:
-        valid, errors = split_valid(fresh, market_hours=market_hours)
-        # Pin the validated batch once: its plan (checkpoint filter + 13-rule
-        # validation pass) otherwise re-executes for the stats collect and the
-        # raw upsert.
-        valid = valid.localCheckpoint(eager=True)
-        # One tiny control-plane agg: the touched (symbol, day) units feed the
-        # raw upsert, the checkpoint advance and the job stats.
-        stats = valid.groupBy("symbol", day).agg(
-            F.max("ts_ns").alias("m"), F.count(F.lit(1)).alias("n")
-        ).collect()
         # The pinned keep-last merge of the touched raw partitions; None for an
         # empty increment, whose frames then come out empty.
         merged = upsert_bars(
             valid, raw_root, "1m", ingest_id=job_id, touched=[(r.symbol, r.date) for r in stats]
         )
-        # Returned outputs are pinned with an eager localCheckpoint, so reading
-        # them re-runs neither validation nor resampling. One pin holds every
-        # frame: the write reads it, and each frame's output is a filter of it.
-        outputs: dict[str, DataFrame] = {"errors": errors.localCheckpoint(eager=True)}
+        # Returned outputs read pins, so reading them re-runs neither validation
+        # nor resampling. One pin holds every frame: the write reads it, and
+        # each frame's output is a filter of it.
+        outputs: dict[str, DataFrame] = {"errors": errors}
         frames = frames or ["5m", "1h", "1d"]
         source = valid if merged is None else merged
         aggs = resample_all(source.select(*BAR_COLUMNS), frames).localCheckpoint(eager=True)
@@ -153,7 +154,7 @@ def incremental_job(
         metrics.record("ingest_job_success", 1.0, provider, feed)
         metrics.record("ingest_job_total_bars", total, provider, feed)
         metrics.record("ingest_symbols_success", float(len(maxes)), provider, feed)
-        metrics.record("validation_errors", float(outputs["errors"].count()), provider, feed)
+        metrics.record("validation_errors", float(sum(r.e for r in groups)), provider, feed)
     return outputs
 
 

@@ -167,25 +167,58 @@ def test_store_refuses_a_non_postgres_uri(spark, tmp_path, monkeypatch):
 # incremental_job wiring
 
 def test_incremental_job_writes_control_plane(spark, tmp_path):
+    from marketpipe_spark.lake import read_bars
+
     db = str(tmp_path / "control.db")  # one file for all three stores, as the CLI keeps them
     jobs = JobsStore(spark, db)
     metrics = MetricsStore(spark, db)
     cps = CheckpointStore(spark, db)
-    outputs = incremental_job(
-        spark, "job1", _bars(spark, "AAPL", DAY1, 10),
-        str(tmp_path / "raw"), str(tmp_path / "agg"), cps,
-        jobs=jobs, metrics=metrics, provider="fake", feed="iex",
+    day2 = DAY1 + 24 * 60 * NS_MIN
+    bad = spark.createDataFrame(
+        [
+            # a dup pair: rule 1 flags the second copy, and both leave raw
+            ("DUP", DAY1, 100.0, 101.0, 99.0, 100.5, 10),
+            ("DUP", DAY1, 100.0, 101.0, 99.0, 100.5, 10),
+            # MSFT's second day holds only this row, which violates two rules
+            ("MSFT", day2, 102.0, 101.0, 103.0, 102.0, -1),
+        ],
+        "symbol string, ts_ns long, open double, high double, low double, close double, volume long",
     )
-    assert outputs["errors"].count() == 0
-    assert cps.last_processed("job1", "AAPL") == DAY1 + 9 * NS_MIN
-    jrows = jobs.load().collect()
-    assert len(jrows) == 1
-    assert jrows[0].state == "completed" and jrows[0].bars_processed == 10
+    bars = _bars(spark, "AAPL", DAY1, 10).union(_bars(spark, "MSFT", DAY1, 3)).union(bad)
+    sc = spark.sparkContext
+    group = "test-control-plane-increment"
+    sc.setJobGroup(group, "increment")
+    try:
+        outputs = incremental_job(
+            spark, "job1", bars, str(tmp_path / "raw"), str(tmp_path / "agg"), cps,
+            jobs=jobs, metrics=metrics, provider="fake", feed="iex",
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # one validation pass: its pin, one grouped collect, the upsert and the frames
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= 13, n_jobs
+
+    raw = read_bars(spark, str(tmp_path / "raw"), frame="1m")
+    assert {r.symbol: r["count"] for r in raw.groupBy("symbol").count().collect()} == {"AAPL": 10, "MSFT": 3}
+    assert sorted((r.symbol, r.ts_ns, r.reason) for r in outputs["errors"].collect()) == [
+        ("DUP", DAY1, "non_monotonic_timestamp"),
+        ("MSFT", day2, "negative_volume"),
+        ("MSFT", day2, "ohlc_inconsistent"),
+    ]
+    # checkpoints advance to the newest valid row only
+    assert cps.positions("job1") == {"AAPL": DAY1 + 9 * NS_MIN, "MSFT": DAY1 + 2 * NS_MIN}
+    jrows = {(r.symbol, r.day): r for r in jobs.load().collect()}
+    # the units include the days that hold only invalid rows
+    assert set(jrows) == {("AAPL", D1), ("MSFT", D1), ("DUP", D1), ("MSFT", D1 + dt.timedelta(days=1))}
+    assert {r.state for r in jrows.values()} == {"completed"}
+    assert jrows[("AAPL", D1)].bars_processed == 10 and jrows[("MSFT", D1)].bars_processed == 3
     names = set(metrics.list_names())
     assert {"ingest_jobs", "ingest_job_success", "ingest_job_total_bars",
             "ingest_symbols_success", "validation_errors"} <= names
     total = metrics.history("ingest_job_total_bars").collect()[0]
-    assert total.value == 10.0 and total.provider == "fake"
+    assert total.value == 13.0 and total.provider == "fake"
+    assert metrics.history("validation_errors").collect()[0].value == 3.0
 
 
 # ---------------------------------------------------------------------------

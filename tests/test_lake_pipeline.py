@@ -10,7 +10,7 @@ import pytest
 from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
-from marketpipe_spark.lake import BAR_COLUMNS, age_to_cutoff, read_bars, upsert_bars, write_bars
+from marketpipe_spark.lake import BAR_COLUMNS, _write_partitioned, age_to_cutoff, read_bars, upsert_bars, write_bars
 from marketpipe_spark.loader import load_ohlcv
 from marketpipe_spark.operators.resample import resample, resample_all
 from marketpipe_spark.plans.views import ensure_views, query, render
@@ -129,27 +129,10 @@ def test_upsert_preserves_columns_and_batch_order(spark, lake_root):
     assert len(row) == 1 and row[0].close == 222.0
 
 
-def test_multi_frame_upsert_keys_on_frame(spark, lake_root):
-    """One upsert lands several frames; the 5m bucket at 13:30 and the 1d
-    bar labelled 13:30 share (symbol, ts_ns) and both stay."""
-    root = f"{lake_root}/upsert_frames"
-    at_1330 = START + 48_600 * 10**9
-    schema = (
-        "frame string, symbol string, ts_ns long, open double, high double, low double,"
-        " close double, volume long"
-    )
-    rows = [("5m", "AAPL", at_1330, 1.0, 1.0, 1.0, 5.0, 1), ("1d", "AAPL", at_1330, 1.0, 1.0, 1.0, 9.0, 1)]
-    upsert_bars(spark.createDataFrame(rows, schema), root, ingest_id="both")
-    # a later 5m-only batch replaces the 5m row and leaves the 1d row alone
-    upsert_bars(spark.createDataFrame([("AAPL", at_1330, 2.0, 2.0, 2.0, 6.0, 2)], schema.split(", ", 1)[1]),
-                root, "5m")
-    got = {(r.frame, r.ts_ns): r.close for r in read_bars(spark, root).collect()}
-    assert got == {("5m", at_1330): 6.0, ("1d", at_1330): 9.0}
-
-
 def test_written_files_sorted_by_ts_ns(spark, lake_root):
     """Each lake file is sorted by ts_ns, whether the write's frame is one
-    literal (write_bars) or a column of the batch (a multi-frame upsert)."""
+    literal (write_bars) or a column of the batch (the multi-frame write of
+    an increment's frames)."""
     import glob
 
     import pyarrow.parquet as pq
@@ -158,7 +141,7 @@ def test_written_files_sorted_by_ts_ns(spark, lake_root):
                f"{lake_root}/sorted_raw", "1m")
     bars = read_bars(spark, f"{lake_root}/sorted_raw", frame="1m", columns=BAR_COLUMNS)
     write_bars(resample(bars, "5m"), f"{lake_root}/sorted_one", "5m")
-    upsert_bars(resample_all(bars, ["5m", "1h"]), f"{lake_root}/sorted_all")
+    _write_partitioned(resample_all(bars, ["5m", "1h"]), f"{lake_root}/sorted_all", None, "append")
     for root, n_files in ((f"{lake_root}/sorted_one", 4), (f"{lake_root}/sorted_all", 8)):
         files = glob.glob(f"{root}/frame=*/symbol=*/date=*/*.parquet")
         assert len(files) == n_files

@@ -193,7 +193,7 @@ def test_incremental_job_checkpoints_and_slices(spark, tmp_path, monkeypatch):
     assert resumed == [{"AAPL": day1 + 9 * NS_MIN}]
     assert sc.statusTracker().getJobIdsForGroup(resume_group) == []
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert n_jobs <= 18, n_jobs
+    assert n_jobs <= 13, n_jobs
     assert cps.last_processed("job1", "AAPL") == day1 + 14 * NS_MIN
     raw_rows = read_bars(spark, raw, frame="1m").count()
     assert raw_rows == 15  # no duplicates landed
